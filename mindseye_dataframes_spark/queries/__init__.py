@@ -10,6 +10,9 @@ re-exports this registry.
 from __future__ import annotations
 
 import importlib
+import json
+import os
+import re
 
 from mindseye_dataframes_spark.queries.registry import REGISTRY, Query, query  # noqa: F401
 
@@ -491,6 +494,38 @@ STALE_R07 = (
 STALE_R09 = (
     PROVEN_R09 - PROVEN_R10 - PROVEN_R11 - PROVEN_R12 - PROVEN_R13
 )
+
+
+# The driver writes one CORRECTNESS_rNN.json per round next to
+# __spark_entry__.py, at the repository root.
+_REPO_ROOT = os.path.dirname(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+)
+_CORRECTNESS = re.compile(r"CORRECTNESS_r(\d+)\.json")
+
+
+def last_green(root: str = _REPO_ROOT) -> dict[str, int]:
+    """Each query's last driver round with a green (``hash_match``) row
+    in the ``CORRECTNESS_rNN.json`` files under ``root``."""
+    last: dict[str, int] = {}
+    for fname in os.listdir(root):
+        m = _CORRECTNESS.fullmatch(fname)
+        if not m:
+            continue
+        with open(os.path.join(root, fname)) as fh:
+            rows = json.load(fh)
+        for name, row in rows.items():
+            if row.get("hash_match"):
+                last[name] = max(last.get(name, 0), int(m.group(1)))
+    return last
+
+
+def window_order(
+    names, last: dict[str, int], refresh: set[str]
+) -> list[str]:
+    """Refresh set first, then never-proven queries (round 1), then
+    the rest by last green round, oldest first; ties by name."""
+    return sorted(names, key=lambda n: (0 if n in refresh else last.get(n, 1), n))
 
 
 def _order_key(item: tuple[str, Query]) -> tuple[int, str]:

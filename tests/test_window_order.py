@@ -16,6 +16,8 @@ query remains oracle-bearing.
 
 from __future__ import annotations
 
+import os
+
 from mindseye_dataframes_spark.queries import (
     PROVEN_R02,
     PROVEN_R03,
@@ -144,3 +146,22 @@ def test_window_is_exactly_refresh_plus_unproven_plus_stalest():
     assert not (outside and wasted), (
         f"window wastes slots {wasted} while {outside} wait outside"
     )
+
+
+def test_derived_order_matches_hand_kept_sets(tmp_path):
+    import shutil
+
+    from mindseye_dataframes_spark.queries import (
+        _REPO_ROOT,
+        REGISTRY,
+        last_green,
+        window_order,
+    )
+
+    for rnd in range(1, 14):
+        src = os.path.join(_REPO_ROOT, f"CORRECTNESS_r{rnd:02d}.json")
+        if os.path.exists(src):
+            shutil.copy(src, tmp_path)
+    derived = window_order(load_all(), last_green(str(tmp_path)), REFRESH_R14)
+    assert derived == list(load_all())
+    assert len(derived) == len(REGISTRY) == 236
