@@ -5,6 +5,14 @@ a PySpark callable ``(spark, sf_dir) -> DataFrame`` plus (when the
 semantics are SQL-expressible) the equivalent ANSI SQL the DuckDB
 oracle runs on the same parquet tables. ``__spark_entry__.py`` simply
 re-exports this registry.
+
+The driver checks only the FIRST 50 entries of ``queries()``, so the
+registry order is the verification strategy. It is derived from the
+driver's own ``CORRECTNESS_rNN.json`` files: queries in ``REFRESH``
+head the window, never-proven queries come next, and the rest follow
+by last green round, oldest first, so re-verification rotates. The
+per-round step is to edit ``REFRESH``; the next CORRECTNESS file does
+the rest.
 """
 
 from __future__ import annotations
@@ -13,6 +21,7 @@ import importlib
 import json
 import os
 import re
+from collections.abc import Iterable
 
 from mindseye_dataframes_spark.queries.registry import REGISTRY, Query, query  # noqa: F401
 
@@ -54,447 +63,13 @@ _MODULES = (
     "paragraphs",
 )
 _loaded = False
+_ordered: dict[str, Query] = {}
 
-# Queries already hash-verified green by a previous driver round.
-# The driver checks only the FIRST 50 entries of ``queries()``, so
-# ordering IS the verification strategy: queries with no green row yet
-# go first, already-proven ones fill the window behind them (least
-# recently verified first, so regression coverage rotates), and
-# oracle-less (rows-only) queries go last. Update these sets each
-# round from the latest CORRECTNESS file.
-PROVEN_R02 = {
-    # green in CORRECTNESS_r02.json (50/50)
-    "q01_pricing_summary", "q02_filter_project", "q03_staging_cast",
-    "q04_topk_orders", "q05_revenue_by_region", "q06_dictionary_keys",
-    "q07_group_moments", "q08_semi_join", "q09_anti_join",
-    "q10_outer_join_agg", "q11_union_groups", "q12_intersect_except",
-    "q13_zip_positional", "q14_count_distinct", "q15_rollup",
-    "q16_window_topn", "q17_window_lag_delta", "q18_running_sum",
-    "q25_sessionization", "q43_string_functions", "q44_date_functions",
-    "q45_math_functions", "q46_percentiles", "q47_cube",
-    "q51_full_outer_join", "q52_right_and_cross", "q53_json_extraction",
-    "q54_supplier_volume", "q55_sliding_window", "q56_curation_funnel",
-    "q57_pivot", "q59_grouping_sets", "q67_audio_features",
-    "q68_csv_roundtrip", "q69_json_roundtrip", "q70_scalar_subquery",
-    "q71_conditional_agg", "q72_orc_roundtrip", "q73_map_column",
-    "q74_exact_stats", "q75_hash_sample", "q76_profile_columns",
-    "q78_eval_identity", "q79_dup_clusters_star",
-    "q80_ngram_jaccard_pairs", "q81_pack_sequences", "q82_seeded_shuffle",
-    "q83_mixture_sample", "q84_video_frame_sample",
-    "q85_partitioned_layout_roundtrip",
-}
-PROVEN_R03 = {
-    # green in CORRECTNESS_r03.json (49/50; the one red, q114, is
-    # deliberately absent so it claims a group-0 slot until green)
-    "q100_scd2_intervals", "q101_trend_per_user", "q102_fuzzy_name_match",
-    "q103_unpivot_metrics", "q104_nullsafe_join", "q105_twap",
-    "q108_quality_gate", "q109_debounce", "q110_ordered_funnel",
-    "q111_incremental_agg", "q113_udtf_token_windows",
-    "q115_dedup_survivorship", "q19_moving_avg", "q20_ntile_rank",
-    "q21_first_last", "q22_asof_join", "q23_range_join",
-    "q24_tumbling_window", "q26_text_stats", "q27_quality_by_lang",
-    "q28_token_frequency", "q29_simhash_fingerprints", "q30_exact_dedup",
-    "q31_minhash_signatures", "q32_lsh_dup_pairs", "q33_simhash_clusters",
-    "q34_embedding_near_dup", "q35_cosine_topk", "q36_ann_lsh_topk",
-    "q37_zscore_expansion", "q38_onehot_labels", "q39_param_identity",
-    "q41_blob_metadata", "q58_language_id", "q60_ann_ivf_topk",
-    "q86_pii_redaction", "q87_contamination_screen", "q88_chunk_documents",
-    "q89_corpus_extremes", "q90_vector_features", "q91_token_positions",
-    "q92_binned_interval_join", "q93_trailing_anomaly",
-    "q94_distinctive_terms", "q95_price_histogram", "q96_latest_per_key",
-    "q97_zorder_layout", "q98_gap_fill", "q99_merge_upsert",
-}
-PROVEN_R04 = {
-    # green in CORRECTNESS_r04.json (50/50) — includes the five former
-    # PROVEN_R01_ONLY queries and q01, all re-proven that round, so the
-    # R01-only set is retired
-    "q114_embedding_normalize", "q116_gopher_quality",
-    "q117_repetition_ratio", "q118_pmi_collocations",
-    "q119_vocab_oov_rate", "q120_simhash_hamming_pairs",
-    "q121_retention_cohorts", "q122_last_touch_attribution",
-    "q123_langid_confusion", "q124_stratified_exact_sample",
-    "q125_copurchase_degrees", "q126_triangle_count",
-    "q127_int8_quantize", "q129_salted_hot_agg", "q130_target_encoding",
-    "q131_group_split", "q132_association_rules",
-    "q133_conversion_latency", "q134_snapshot_diff",
-    "q135_quantile_binning", "q136_event_transitions",
-    "q137_balanced_resample", "q138_contribution_margins",
-    "q139_mom_growth", "q140_kmeans_clusters",
-    "q141_bloom_prefilter_join", "q142_ewma_smoothing",
-    "q143_pareto_frontier", "q144_table_fingerprint",
-    "q145_rolling_active_users", "q146_pagerank_fixed_point",
-    "q147_bpe_pair_counts", "q148_price_decile_lift",
-    "q149_session_paths", "q150_cross_source_dup_matrix",
-    "q151_shard_balance", "q152_gap_percentiles",
-    "q153_join_key_skew_profile", "q154_incremental_corpus_dedup",
-    "q155_cohort_ltv_curve", "q158_dedup_pipeline_end_to_end",
-    "q159_referential_integrity", "q160_mixture_token_plan",
-    "q161_interval_union", "q61_token_count_bpe",
-    "q62_winnow_fingerprints", "q64_analytic_ranks", "q66_image_resize",
-    "q77_dup_clusters", "q01_pricing_summary",
-}
-PROVEN_R05 = {
-    # green in CORRECTNESS_r05.json (50/50): the 11 round-5 additions
-    # plus 39 re-proven round-2-stale queries
-    "q02_filter_project", "q03_staging_cast", "q04_topk_orders",
-    "q05_revenue_by_region", "q06_dictionary_keys", "q07_group_moments",
-    "q08_semi_join", "q09_anti_join", "q10_outer_join_agg",
-    "q11_union_groups", "q12_intersect_except", "q13_zip_positional",
-    "q14_count_distinct", "q15_rollup", "q16_window_topn",
-    "q17_window_lag_delta", "q18_running_sum", "q25_sessionization",
-    "q43_string_functions", "q44_date_functions", "q45_math_functions",
-    "q46_percentiles", "q47_cube", "q51_full_outer_join",
-    "q52_right_and_cross", "q53_json_extraction", "q54_supplier_volume",
-    "q55_sliding_window", "q56_curation_funnel", "q57_pivot",
-    "q59_grouping_sets", "q67_audio_features", "q68_csv_roundtrip",
-    "q69_json_roundtrip", "q70_scalar_subquery", "q71_conditional_agg",
-    "q72_orc_roundtrip", "q73_map_column", "q74_exact_stats",
-    "q162_pq_recall", "q163_semdedup", "q164_topp_quality_curation",
-    "q165_source_divergence", "q166_temperature_mixture",
-    "q167_net_token_accounting", "q168_distribution_drift",
-    "q170_shared_span_stats", "q171_corpus_admission_pipeline",
-    "q172_label_centroid_similarity", "q173_mixture_materialized",
-}
-
-PROVEN_R06 = {
-    # green in CORRECTNESS_r06.json (50/50)
-    "q100_scd2_intervals", "q101_trend_per_user", "q102_fuzzy_name_match",
-    "q103_unpivot_metrics", "q104_nullsafe_join", "q105_twap",
-    "q106_approx_percentiles", "q107_sketch_rollup", "q108_quality_gate",
-    "q109_debounce", "q110_ordered_funnel", "q111_incremental_agg",
-    "q112_image_phash_clusters", "q113_udtf_token_windows",
-    "q115_dedup_survivorship", "q128_pca_projection",
-    "q156_rolling_hll_wau", "q169_bpe_trainer", "q174_unimax_mixture",
-    "q175_ingest_novelty", "q176_packing_efficiency",
-    "q177_binary_png_roundtrip", "q178_schema_evolution",
-    "q179_streaming_tumbling_parity", "q180_paragraph_dedup_rewrite",
-    "q181_importance_resampling", "q182_streaming_dedup_parity",
-    "q183_bpe_encode_accounting", "q184_knn_label_eval",
-    "q185_split_leakage_audit", "q186_leakage_eviction",
-    "q187_incremental_paragraph_dedup", "q19_moving_avg",
-    "q40_featurize_pipeline", "q42_image_decode_features",
-    "q48_seeded_sample", "q49_random_split", "q50_approx_distinct",
-    "q63_stratified_sample", "q65_featurize_temporal_embedding",
-    "q75_hash_sample", "q76_profile_columns", "q78_eval_identity",
-    "q79_dup_clusters_star", "q80_ngram_jaccard_pairs",
-    "q81_pack_sequences", "q82_seeded_shuffle", "q83_mixture_sample",
-    "q84_video_frame_sample", "q85_partitioned_layout_roundtrip",
-}
-
-# Queries whose IMPLEMENTATION changed in round 6 AFTER their last
-# driver check (VERDICT r6 "What's wrong"): their green rows prove
-# superseded code, so they headed the round-7 window. Kept for the
-# historical record / staleness math; superseded by REFRESH_R08.
-REFRESH_R07 = {
-    "q162_pq_recall",            # PQ rewritten to ADC+re-rank (22669e8)
-    "q158_dedup_pipeline_end_to_end",  # shared pair-stage refactor
-    "q167_net_token_accounting",       # shared pair-stage refactor
-    "q77_dup_clusters",                # shared pair-stage refactor
-    "q32_lsh_dup_pairs",               # stage plumbing touched
-    # q157_pq_ann_topk got its first (rows-only) driver slot in r7 and
-    # was retired from the registry in r8 (folded into q162's gate —
-    # VERDICT r7 item 7), so it no longer appears anywhere
-}
-
-PROVEN_R07 = {
-    # green in CORRECTNESS_r07.json (49/50; the 50th, q157, was the
-    # rows-only PQ list — retired in round 8, its contract now lives
-    # entirely in q162's hashed recall gate)
-    "q158_dedup_pipeline_end_to_end", "q162_pq_recall",
-    "q167_net_token_accounting", "q188_packed_png_decode",
-    "q189_semdedup_tau_curve", "q190_token_budget_selection",
-    "q191_intra_doc_dedup", "q192_standing_ann_topk",
-    "q193_standing_bm25_topk", "q194_hard_negative_mining",
-    "q195_streaming_interval_join_parity",
-    "q196_streaming_stateful_totals_parity",
-    "q197_streaming_session_window_parity",
-    "q198_streaming_cdc_upsert_parity", "q199_hybrid_rrf_retrieval",
-    "q200_cross_source_quality_calibration", "q201_nb_quality_classifier",
-    "q202_count_min_heavy_hitters", "q203_incremental_bm25_update",
-    "q204_incremental_ann_update", "q205_streaming_bm25_ingest",
-    "q206_bigram_lm_perplexity_filter", "q207_substring_dedup_rewrite",
-    "q20_ntile_rank", "q21_first_last", "q22_asof_join", "q23_range_join",
-    "q24_tumbling_window", "q26_text_stats", "q27_quality_by_lang",
-    "q28_token_frequency", "q29_simhash_fingerprints", "q30_exact_dedup",
-    "q31_minhash_signatures", "q32_lsh_dup_pairs", "q33_simhash_clusters",
-    "q34_embedding_near_dup", "q35_cosine_topk", "q36_ann_lsh_topk",
-    "q37_zscore_expansion", "q38_onehot_labels", "q39_param_identity",
-    "q41_blob_metadata", "q58_language_id", "q60_ann_ivf_topk",
-    "q77_dup_clusters", "q86_pii_redaction", "q87_contamination_screen",
-    "q88_chunk_documents",
-}
-
-# Queries whose IMPLEMENTATION changed in round 8 AFTER their last
-# green driver check: their green rows prove superseded code, so they
-# head the round-8 window regardless of nominal staleness.
-REFRESH_R08 = {
-    "q201_nb_quality_classifier",   # coalesce'd prediction (ADVICE r7)
-    "q195_streaming_interval_join_parity",  # rollup before snapshot (item 4)
-    "q196_streaming_stateful_totals_parity",  # last-update reduce before snapshot
-    "q197_streaming_session_window_parity",   # snapshot path reordered
-    "q198_streaming_cdc_upsert_parity",        # staging_dir resolution
-    "q182_streaming_dedup_parity",             # staging_dir resolution
-    "q205_streaming_bm25_ingest",              # staging_dir resolution
-    "q188_packed_png_decode",                  # staging_dir resolution
-}
-
-# Round 9: the round-8 driver artifacts (CORRECTNESS_r08) never
-# arrived, so the r8 refresh set was never re-proven and STAYS at the
-# head; q204's base construction was refactored into the shared
-# ``ann_incremental_base`` (consumed by the new q212) after its r7
-# green row, so it joins them.
-REFRESH_R09 = REFRESH_R08 | {
-    "q204_incremental_ann_update",  # base extracted to shared helper
-}
-
-PROVEN_R09 = {
-    # green in CORRECTNESS_r09.json (50/50): the 26 round-9 additions
-    # (q208-q234), the full REFRESH_R09 set re-proven, and the q89-q99
-    # r3-stale block rotated per the round-7 ask.
-    "q01_pricing_summary", "q114_embedding_normalize",
-    "q116_gopher_quality", "q117_repetition_ratio",
-    "q182_streaming_dedup_parity", "q188_packed_png_decode",
-    "q195_streaming_interval_join_parity",
-    "q196_streaming_stateful_totals_parity",
-    "q197_streaming_session_window_parity",
-    "q198_streaming_cdc_upsert_parity", "q201_nb_quality_classifier",
-    "q204_incremental_ann_update", "q205_streaming_bm25_ingest",
-    "q208_bm25_tombstone_delete", "q209_ann_tombstone_delete",
-    "q210_bm25_compaction", "q211_ann_compaction",
-    "q212_streaming_ann_ingest", "q213_ngram_containment_pairs",
-    "q214_bitext_margin_mining", "q215_packed_wav_decode",
-    "q216_curriculum_schedule", "q217_rendezvous_sharding",
-    "q218_ann_index_checkpoint", "q219_bm25_index_checkpoint",
-    "q220_sketch_join_size", "q221_matryoshka_recall_curve",
-    "q222_retrieval_quality_eval", "q223_kcenter_coreset",
-    "q225_kmeans_silhouette", "q226_lsh_dedup_eval",
-    "q227_cluster_balanced_sample", "q228_streaming_outer_join_parity",
-    "q229_python_datasource", "q230_python_stream_datasource",
-    "q231_priority_sample", "q232_block_manifest",
-    "q233_bloom_fpr_gate", "q234_hll_overlap_gate",
-    "q89_corpus_extremes", "q90_vector_features", "q91_token_positions",
-    "q92_binned_interval_join", "q93_trailing_anomaly",
-    "q94_distinctive_terms", "q95_price_histogram", "q96_latest_per_key",
-    "q97_zorder_layout", "q98_gap_fill", "q99_merge_upsert",
-}
-
-# Queries whose IMPLEMENTATION changes in round 10 AFTER their last
-# green driver check (query-path semantics or output-affecting edits
-# only; value-preserving plan/guard changes are noted in git history
-# but do not burn a window slot — the 44 r4-stale rotations take
-# priority per VERDICT r9 item 1).
-REFRESH_R10: set[str] = {
-    "q231_priority_sample",   # τ=0 for the ≤k-doc corpus edge (ADVICE r9)
-    "q234_hll_overlap_gate",  # union-scaled gate tolerance (ADVICE r9)
-    "q228_streaming_outer_join_parity",  # stage/drain split (item 4)
-    "q218_ann_index_checkpoint",         # stage/fold split (item 4)
-}
-
-PROVEN_R10 = {
-    # green in CORRECTNESS_r10.json (50/50): the 44 r4-stale rotations
-    # VERDICT r9 asked for, the four REFRESH_R10 re-proofs, and the two
-    # round-10 additions (q235/q236).
-    "q118_pmi_collocations", "q119_vocab_oov_rate",
-    "q120_simhash_hamming_pairs", "q121_retention_cohorts",
-    "q122_last_touch_attribution", "q123_langid_confusion",
-    "q124_stratified_exact_sample", "q125_copurchase_degrees",
-    "q126_triangle_count", "q127_int8_quantize", "q129_salted_hot_agg",
-    "q130_target_encoding", "q131_group_split", "q132_association_rules",
-    "q133_conversion_latency", "q134_snapshot_diff",
-    "q135_quantile_binning", "q136_event_transitions",
-    "q137_balanced_resample", "q138_contribution_margins",
-    "q139_mom_growth", "q140_kmeans_clusters", "q141_bloom_prefilter_join",
-    "q142_ewma_smoothing", "q143_pareto_frontier", "q144_table_fingerprint",
-    "q145_rolling_active_users", "q146_pagerank_fixed_point",
-    "q147_bpe_pair_counts", "q148_price_decile_lift", "q149_session_paths",
-    "q150_cross_source_dup_matrix", "q151_shard_balance",
-    "q152_gap_percentiles", "q153_join_key_skew_profile",
-    "q154_incremental_corpus_dedup", "q155_cohort_ltv_curve",
-    "q159_referential_integrity", "q160_mixture_token_plan",
-    "q161_interval_union", "q218_ann_index_checkpoint",
-    "q228_streaming_outer_join_parity", "q231_priority_sample",
-    "q234_hll_overlap_gate", "q235_eval_preview_zip",
-    "q236_streaming_full_outer_join_parity", "q61_token_count_bpe",
-    "q62_winnow_fingerprints", "q64_analytic_ranks", "q66_image_resize",
-}
-
-# Queries whose IMPLEMENTATION changes in round 11 AFTER their last
-# green driver check: q232's segment arithmetic was unified onto the
-# shared ``manifest_segments`` helper (VERDICT r10 item 1), so its r9
-# green row proves superseded code and it re-proves at the head. The
-# round-11 zip_frames cache-key change (retiring ``df._jdf``) and the
-# staging/parallelism guards are value-preserving and do not burn a
-# slot. Superseded by REFRESH_R12.
-REFRESH_R11: set[str] = {
-    "q232_block_manifest",  # body now routes through manifest_segments
-}
-
-PROVEN_R11 = {
-    # green in CORRECTNESS_r11.json (50/50): the q232 refresh re-proof,
-    # the new q237, and the 48 r5-stale rotations (q02–q18/q25/q43–q74/
-    # q163–q173 families)
-    "q02_filter_project", "q03_staging_cast", "q04_topk_orders",
-    "q05_revenue_by_region", "q06_dictionary_keys", "q07_group_moments",
-    "q08_semi_join", "q09_anti_join", "q10_outer_join_agg",
-    "q11_union_groups", "q12_intersect_except", "q13_zip_positional",
-    "q14_count_distinct", "q15_rollup", "q16_window_topn",
-    "q17_window_lag_delta", "q18_running_sum", "q25_sessionization",
-    "q43_string_functions", "q44_date_functions", "q45_math_functions",
-    "q46_percentiles", "q47_cube", "q51_full_outer_join",
-    "q52_right_and_cross", "q53_json_extraction", "q54_supplier_volume",
-    "q55_sliding_window", "q56_curation_funnel", "q57_pivot",
-    "q59_grouping_sets", "q67_audio_features", "q68_csv_roundtrip",
-    "q69_json_roundtrip", "q70_scalar_subquery", "q71_conditional_agg",
-    "q72_orc_roundtrip", "q73_map_column", "q74_exact_stats",
-    "q163_semdedup", "q164_topp_quality_curation",
-    "q165_source_divergence", "q166_temperature_mixture",
-    "q168_distribution_drift", "q170_shared_span_stats",
-    "q171_corpus_admission_pipeline", "q172_label_centroid_similarity",
-    "q173_mixture_materialized", "q232_block_manifest",
-    "q237_manifest_incremental_append",
-}
-
-# Queries whose IMPLEMENTATION changes in round 12 AFTER their last
-# green driver check: q237 now passes ``base_keys`` (the pre-explode
-# base docs) into manifest_append's precondition so the base manifest
-# plan executes exactly once (ADVICE r11) — its r11 green row proves
-# superseded code, so it re-proves at the head. Superseded by
-# REFRESH_R13.
-REFRESH_R12: set[str] = {
-    "q237_manifest_incremental_append",
-}
-
-PROVEN_R12 = {
-    # green in CORRECTNESS_r12.json (50/50): the q237 refresh re-proof
-    # and the 49 r6-stale rotations (q100–q115/q128/q156/q169/
-    # q174–q187/q19/q40–q85 families) — VERDICT r11 item 1's ask
-    "q100_scd2_intervals", "q101_trend_per_user", "q102_fuzzy_name_match",
-    "q103_unpivot_metrics", "q104_nullsafe_join", "q105_twap",
-    "q106_approx_percentiles", "q107_sketch_rollup", "q108_quality_gate",
-    "q109_debounce", "q110_ordered_funnel", "q111_incremental_agg",
-    "q112_image_phash_clusters", "q113_udtf_token_windows",
-    "q115_dedup_survivorship", "q128_pca_projection", "q156_rolling_hll_wau",
-    "q169_bpe_trainer", "q174_unimax_mixture", "q175_ingest_novelty",
-    "q176_packing_efficiency", "q177_binary_png_roundtrip",
-    "q178_schema_evolution", "q179_streaming_tumbling_parity",
-    "q180_paragraph_dedup_rewrite", "q181_importance_resampling",
-    "q183_bpe_encode_accounting", "q184_knn_label_eval",
-    "q185_split_leakage_audit", "q186_leakage_eviction",
-    "q187_incremental_paragraph_dedup", "q19_moving_avg",
-    "q237_manifest_incremental_append", "q40_featurize_pipeline",
-    "q42_image_decode_features", "q48_seeded_sample", "q49_random_split",
-    "q50_approx_distinct", "q63_stratified_sample",
-    "q65_featurize_temporal_embedding", "q75_hash_sample",
-    "q76_profile_columns", "q78_eval_identity", "q79_dup_clusters_star",
-    "q80_ngram_jaccard_pairs", "q81_pack_sequences", "q82_seeded_shuffle",
-    "q83_mixture_sample", "q84_video_frame_sample",
-    "q85_partitioned_layout_roundtrip",
-}
-
-# Queries whose IMPLEMENTATION changes in round 13 AFTER their last
-# green driver check (VERDICT r12 items 3 and 5): q34's candidate
-# generation was re-routed from the all-pairs theta-join onto the
-# block-partitioned GEMM triangle scheme with exact re-verify, and
-# q126's 2-path join was re-oriented by (degree, id) to bound fan-out
-# by O(sqrt(m)) on skewed graphs — their green rows prove superseded
-# plans, so both re-prove at the head of the r13 window.
-REFRESH_R13: set[str] = {
-    "q34_embedding_near_dup",
-    "q126_triangle_count",
-    # q195's drain path changed after its r9 green row: the interval
-    # join now sizes its state-store partitions explicitly (8, like
-    # every drain since f171822 — VERDICT r13 item 2 fixed this
-    # comment's stale "32") instead of inheriting a default-conf
-    # session's 200 — physical-only, but the executed plan differs,
-    # so it re-proves.
-    "q195_streaming_interval_join_parity",
-}
-
-# Queries verified green by the round-13 driver (CORRECTNESS_r13.json,
-# 50/50): freshest evidence, so they fill the window last.
-PROVEN_R13 = {
-    "q01_pricing_summary", "q114_embedding_normalize", "q116_gopher_quality",
-    "q117_repetition_ratio", "q126_triangle_count", "q158_dedup_pipeline_end_to_end",
-    "q162_pq_recall", "q167_net_token_accounting", "q182_streaming_dedup_parity",
-    "q188_packed_png_decode", "q189_semdedup_tau_curve", "q190_token_budget_selection",
-    "q191_intra_doc_dedup", "q192_standing_ann_topk", "q193_standing_bm25_topk",
-    "q194_hard_negative_mining", "q195_streaming_interval_join_parity", "q199_hybrid_rrf_retrieval",
-    "q200_cross_source_quality_calibration", "q202_count_min_heavy_hitters", "q203_incremental_bm25_update",
-    "q206_bigram_lm_perplexity_filter", "q207_substring_dedup_rewrite", "q20_ntile_rank",
-    "q21_first_last", "q22_asof_join", "q238_simhash64_hamming_pairs",
-    "q23_range_join", "q24_tumbling_window", "q26_text_stats",
-    "q27_quality_by_lang", "q28_token_frequency", "q29_simhash_fingerprints",
-    "q30_exact_dedup", "q31_minhash_signatures", "q32_lsh_dup_pairs",
-    "q33_simhash_clusters", "q34_embedding_near_dup", "q35_cosine_topk",
-    "q36_ann_lsh_topk", "q37_zscore_expansion", "q38_onehot_labels",
-    "q39_param_identity", "q41_blob_metadata", "q58_language_id",
-    "q60_ann_ivf_topk", "q77_dup_clusters", "q86_pii_redaction",
-    "q87_contamination_screen", "q88_chunk_documents",
-}
-
-# Queries whose EXECUTED PLAN changes in round 14 after their last
-# green driver row — the optimization round's rewrites (all
-# value-identical by construction and re-proven locally at sf0.01,
-# but the driver's green rows describe superseded plans, so they
-# re-prove at the head of the r14 window):
-# - q80/q213/q226: decomposed verify reworked (two-level capped
-#   bitmap + sparse tail, q226's verifies re-routed through it,
-#   intersect UDF single-evaluation via asNondeterministic);
-# - q184/q194: scoring re-routed onto cosine_topk_gemm (BLAS
-#   candidates + exact cosine_ranked re-verify);
-# - the eight streaming drains: state-store partition count now
-#   derived from the staged drop's size (same value 8 at gate SFs,
-#   but the sizing path is new code);
-# - q50/q234: explicit null-exclusion filters pin the countDistinct
-#   semantics (adds a Filter node).
-REFRESH_R14: set[str] = {
-    # q31/q32 emit MinHash signatures whose UDF body switched to the
-    # batch distinct-shingle form (bit-identical, unit-pinned) — the
-    # plan is unchanged but the executed code is new, so they re-prove
-    "q31_minhash_signatures",
-    "q32_lsh_dup_pairs",
-    "q80_ngram_jaccard_pairs",
-    "q213_ngram_containment_pairs",
-    "q226_lsh_dedup_eval",
-    "q184_knn_label_eval",
-    "q194_hard_negative_mining",
-    "q179_streaming_tumbling_parity",
-    "q182_streaming_dedup_parity",
-    "q195_streaming_interval_join_parity",
-    "q196_streaming_stateful_totals_parity",
-    "q197_streaming_session_window_parity",
-    "q198_streaming_cdc_upsert_parity",
-    "q228_streaming_outer_join_parity",
-    "q236_streaming_full_outer_join_parity",
-    "q50_approx_distinct",
-    "q234_hll_overlap_gate",
-}
-
-# Stalest-first staleness: a query's group is its LAST proven round
-# (newest membership wins), so re-verification coverage rotates.
-STALE_R02 = (
-    ((((PROVEN_R02 - PROVEN_R03) - PROVEN_R04) - PROVEN_R05) - PROVEN_R06)
-    - PROVEN_R07
-) - PROVEN_R09 - PROVEN_R10 - PROVEN_R11 - PROVEN_R12 - PROVEN_R13
-STALE_R03 = (
-    (((PROVEN_R03 - PROVEN_R04) - PROVEN_R05) - PROVEN_R06) - PROVEN_R07
-) - PROVEN_R09 - PROVEN_R10 - PROVEN_R11 - PROVEN_R12 - PROVEN_R13
-STALE_R04 = (
-    ((PROVEN_R04 - PROVEN_R05) - PROVEN_R06) - PROVEN_R07
-) - PROVEN_R09 - PROVEN_R10 - PROVEN_R11 - PROVEN_R12 - PROVEN_R13
-STALE_R05 = (
-    ((PROVEN_R05 - PROVEN_R06) - PROVEN_R07) - PROVEN_R09
-) - PROVEN_R10 - PROVEN_R11 - PROVEN_R12 - PROVEN_R13
-STALE_R06 = (
-    ((PROVEN_R06 - PROVEN_R07) - PROVEN_R09) - PROVEN_R10
-) - PROVEN_R11 - PROVEN_R12 - PROVEN_R13
-STALE_R07 = (
-    (PROVEN_R07 - PROVEN_R09) - PROVEN_R10
-) - PROVEN_R11 - PROVEN_R12 - PROVEN_R13
-STALE_R09 = (
-    PROVEN_R09 - PROVEN_R10 - PROVEN_R11 - PROVEN_R12 - PROVEN_R13
-)
-
+# Queries whose executed code changed after their last green driver
+# row: that row proves superseded code, so they re-prove at the head
+# of the window. Drop a query from it once a CORRECTNESS file shows
+# it green again.
+REFRESH: set[str] = set()
 
 # The driver writes one CORRECTNESS_rNN.json per round next to
 # __spark_entry__.py, at the repository root.
@@ -520,51 +95,16 @@ def last_green(root: str = _REPO_ROOT) -> dict[str, int]:
     return last
 
 
-def window_order(
-    names, last: dict[str, int], refresh: set[str]
-) -> list[str]:
+def window_order(names: Iterable[str], last: dict[str, int], refresh: set[str]) -> list[str]:
     """Refresh set first, then never-proven queries (round 1), then
     the rest by last green round, oldest first; ties by name."""
     return sorted(names, key=lambda n: (0 if n in refresh else last.get(n, 1), n))
 
 
-def _order_key(item: tuple[str, Query]) -> tuple[int, str]:
-    name, q = item
-    if name in REFRESH_R14:
-        group = 0  # changed-after-check: head the window
-    elif q.oracle is None:
-        group = 99  # rows-only checks last — never burn a window slot
-    elif name in PROVEN_R13:
-        group = 13  # freshest evidence: verify last
-    elif name in PROVEN_R12:
-        group = 12
-    elif name in PROVEN_R11:
-        group = 11
-    elif name in PROVEN_R10:
-        group = 10
-    elif name in PROVEN_R09:
-        group = 9
-    elif name in PROVEN_R07:
-        group = 7
-    elif name in PROVEN_R06:
-        group = 6
-    elif name in PROVEN_R05:
-        group = 5
-    elif name in PROVEN_R04:
-        group = 4
-    elif name in PROVEN_R03:
-        group = 3
-    elif name in PROVEN_R02:
-        group = 2
-    else:
-        group = 1  # no green row yet (this round's new): claim a slot
-    return (group, name)
-
-
 def load_all() -> dict[str, Query]:
     """Import every query module (idempotent) and return the registry
-    ordered for the driver's verification window (see _order_key)."""
-    global _loaded
+    ordered for the driver's verification window (see window_order)."""
+    global _loaded, _ordered
     if not _loaded:
         for mod in _MODULES:
             try:
@@ -573,5 +113,7 @@ def load_all() -> dict[str, Query]:
                 # allow partial builds while modules land incrementally
                 if f"queries.{mod}" not in str(exc):
                     raise
+        order = window_order(REGISTRY, last_green(), REFRESH)
+        _ordered = {name: REGISTRY[name] for name in order}
         _loaded = True
-    return dict(sorted(REGISTRY.items(), key=_order_key))
+    return dict(_ordered)

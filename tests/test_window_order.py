@@ -1,59 +1,37 @@
 """The driver checks only the FIRST 50 entries of queries() — the
 registry ordering IS the verification strategy (queries/__init__.py).
-These tests pin the round-14 window so a rotation mistake (stale
-queries pushed out, rows-only burning slots) fails loudly instead of
-silently shrinking coverage.
-
-Round-14 shape: the round-13 driver window re-proved the r7-stale
-block (CORRECTNESS_r13 = PROVEN_R13, 50/50), so STALE_R07 is now
-empty and the r9-proven-never-since group is the re-verification
-front, behind this round's refresh set (REFRESH_R14: the optimization
-round's plan rewrites — the decomposed-verify trio q80/q213/q226, the
-GEMM-scored q184/q194, the eight size-derived streaming drains, and
-the null-pinned q50/q234 — re-prove at the head). Every registered
-query remains oracle-bearing.
+The order is derived from the tracked CORRECTNESS_rNN.json files plus
+the hand-kept REFRESH set; these tests pin its properties so a
+rotation mistake (stale queries pushed out, never-proven queries left
+waiting) fails loudly instead of silently shrinking coverage.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
 from mindseye_dataframes_spark.queries import (
-    PROVEN_R02,
-    PROVEN_R03,
-    PROVEN_R04,
-    PROVEN_R05,
-    PROVEN_R06,
-    PROVEN_R07,
-    PROVEN_R09,
-    PROVEN_R10,
-    PROVEN_R11,
-    PROVEN_R12,
-    PROVEN_R13,
-    REFRESH_R14,
-    STALE_R02,
-    STALE_R03,
-    STALE_R04,
-    STALE_R05,
-    STALE_R06,
-    STALE_R07,
-    STALE_R09,
+    REFRESH,
+    last_green,
     load_all,
+    window_order,
 )
 
+WINDOW = 50
 
-def _group(name, qs):
-    from mindseye_dataframes_spark.queries import _order_key
 
-    return _order_key((name, qs[name]))[0]
+def _row(green: bool) -> dict:
+    return {"rows_match": green, "schema_match": True, "hash_match": green}
 
 
 def test_refresh_set_heads_the_window():
     qs = load_all()
-    window = list(qs)[:50]
+    window = list(qs)[:WINDOW]
     # the changed-after-check queries occupy the first slots, before
     # anything else — their green rows prove superseded code
-    assert set(window[: len(REFRESH_R14)]) == REFRESH_R14
+    assert REFRESH <= set(qs), f"REFRESH names unregistered queries: {REFRESH - set(qs)}"
+    assert set(window[: len(REFRESH)]) == REFRESH
 
 
 def test_every_registered_query_is_oracle_bearing():
@@ -67,54 +45,54 @@ def test_every_registered_query_is_oracle_bearing():
 
 def test_unproven_and_stale_queries_fit_the_window():
     qs = load_all()
-    window = list(qs)[:50]
-    # every never-proven oracle query must get a slot this round
-    unproven = [
-        n
-        for n, q in qs.items()
-        if q.oracle is not None and n not in window and _group(n, qs) == 1
-    ]
-    assert not unproven, f"unproven oracle queries outside the window: {unproven}"
-    # r2-r7-stale are exhausted after the r6/r9/r10/r11/r12/r13
-    # rotations; the r9-proven-never-since group is the
-    # re-verification front and must fill every slot left after the
-    # refresh head and never-proven queries
-    assert not STALE_R02, "r2-stale should be empty after round 6"
-    assert not STALE_R03, "r3-stale should be empty after round 9"
-    assert not STALE_R04, "r4-stale should be empty after round 10"
-    assert not STALE_R05, "r5-stale should be empty after round 11"
-    assert not STALE_R06, "r6-stale should be empty after round 12"
-    assert not STALE_R07, "r7-stale should be empty after round 13"
-    stale_front = {
-        n for n in STALE_R09 - REFRESH_R14 if qs[n].oracle is not None
-    }
-    n_head = len(REFRESH_R14) + sum(1 for n in qs if _group(n, qs) == 1)
-    allowed_overflow = max(0, n_head + len(stale_front) - 50)
-    missing_stale = stale_front - set(window)
-    assert len(missing_stale) <= allowed_overflow, (
-        f"r9-stale queries rotated out beyond the overflow: {missing_stale}"
-    )
+    last = last_green()
+    window = list(qs)[:WINDOW]
+    unproven = [n for n in qs if n not in last and n not in window]
+    assert not unproven, f"never-proven queries outside the window: {unproven}"
 
 
-def test_proven_sets_cover_only_registered_oracle_queries():
+def test_window_is_exactly_refresh_plus_unproven_plus_stalest():
     qs = load_all()
-    proven = (
-        PROVEN_R02
-        | PROVEN_R03
-        | PROVEN_R04
-        | PROVEN_R05
-        | PROVEN_R06
-        | PROVEN_R07
-        | PROVEN_R09
-        | PROVEN_R10
-        | PROVEN_R11
-        | PROVEN_R12
-        | PROVEN_R13
+    last = last_green()
+    window = set(list(qs)[:WINDOW])
+    # no slot may go to a query proven more recently than one that
+    # waits outside (refresh queries are exempt: they head by design)
+    rounds = {n: last.get(n, 1) for n in qs if n not in REFRESH}
+    inside = [r for n, r in rounds.items() if n in window]
+    outside = [r for n, r in rounds.items() if n not in window]
+    assert not outside or max(inside) <= min(outside), (
+        f"window holds round-{max(inside)} queries while round-{min(outside)} ones wait outside"
     )
-    unknown = proven - set(qs)
-    assert not unknown, f"proven sets name unregistered queries: {unknown}"
-    rows_only = {n for n in proven if qs[n].oracle is None}
-    assert not rows_only, f"proven sets contain oracle-less queries: {rows_only}"
+
+
+def test_order_derived_from_synthetic_correctness_files(tmp_path):
+    rounds = {
+        # r01: a green, b red (its first row)
+        1: {"a": _row(True), "b": _row(False)},
+        # r02 is missing: a driver round whose artifacts never arrived
+        # r03: b green, c green, a red (a stays proven at r01)
+        3: {"b": _row(True), "c": _row(True), "a": _row(False)},
+        # r04: c green again, d green
+        4: {"c": _row(True), "d": _row(True)},
+    }
+    for rnd, rows in rounds.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+    # files that are not round records are ignored
+    (tmp_path / "CORRECTNESS_r04_c8.json").write_text(json.dumps({"e": _row(True)}))
+    (tmp_path / "BENCH_r04.json").write_text("{}")
+
+    last = last_green(str(tmp_path))
+    assert last == {"a": 1, "b": 3, "c": 4, "d": 4}
+    # d: green but in REFRESH (heads); e: never proven (round 1, tied
+    # with a's r01 row, so by name after a); then by last green round
+    names = ["a", "b", "c", "d", "e"]
+    assert window_order(names, last, {"d"}) == ["d", "a", "e", "b", "c"]
+    assert window_order(names, last, set()) == ["a", "e", "b", "c", "d"]
+
+
+def test_no_correctness_files_gives_name_order(tmp_path):
+    assert last_green(str(tmp_path)) == {}
+    assert window_order(["q2", "q10", "q1"], {}, set()) == ["q1", "q10", "q2"]
 
 
 def test_readme_query_count():
@@ -122,7 +100,6 @@ def test_readme_query_count():
     literal survived two rounds of registry growth (VERDICT r11 item
     4: '232 named queries' at registry 235), so the count is now
     pinned to len(load_all()) — it can't rot without failing here."""
-    import os
     import re
 
     readme = os.path.join(os.path.dirname(__file__), "..", "README.md")
@@ -134,34 +111,3 @@ def test_readme_query_count():
         f"README says {m.group(1)} named queries; registry has "
         f"{len(load_all())} — update README.md"
     )
-
-
-def test_window_is_exactly_refresh_plus_unproven_plus_stalest():
-    qs = load_all()
-    window = set(list(qs)[:50])
-    # no slot may be wasted on a query proven more recently than r9
-    # while a staler or unproven one waits outside
-    outside = [n for n in qs if n not in window and _group(n, qs) <= 9]
-    wasted = [n for n in window if _group(n, qs) > 9]
-    assert not (outside and wasted), (
-        f"window wastes slots {wasted} while {outside} wait outside"
-    )
-
-
-def test_derived_order_matches_hand_kept_sets(tmp_path):
-    import shutil
-
-    from mindseye_dataframes_spark.queries import (
-        _REPO_ROOT,
-        REGISTRY,
-        last_green,
-        window_order,
-    )
-
-    for rnd in range(1, 14):
-        src = os.path.join(_REPO_ROOT, f"CORRECTNESS_r{rnd:02d}.json")
-        if os.path.exists(src):
-            shutil.copy(src, tmp_path)
-    derived = window_order(load_all(), last_green(str(tmp_path)), REFRESH_R14)
-    assert derived == list(load_all())
-    assert len(derived) == len(REGISTRY) == 236
