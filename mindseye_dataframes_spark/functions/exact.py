@@ -66,19 +66,6 @@ def davg(col: Column | str, scale: int = SCALE) -> Column:
     return F.sum(dec(c, scale)).cast("double") / F.count(c).cast("double")
 
 
-def oracle_dsum(expr: str, scale: int = SCALE) -> str:
-    """DuckDB-side twin of :func:`dsum` (same decimal lattice)."""
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL({PRECISION},{scale}))) AS DOUBLE)"
-
-
-def oracle_davg(expr: str, scale: int = SCALE) -> str:
-    """DuckDB-side twin of :func:`davg`."""
-    return (
-        f"CAST(SUM(CAST(({expr}) AS DECIMAL({PRECISION},{scale}))) AS DOUBLE)"
-        f" / CAST(COUNT({expr}) AS DOUBLE)"
-    )
-
-
 # ---------------------------------------------------------------------------
 # Integer-cents accumulation: the fast path for 2-decimal measures.
 #
@@ -150,18 +137,4 @@ def oracle_tuple_rank(*exprs: str) -> str:
     """DuckDB twin of :func:`tuple_rank` (same padded encoding)."""
     return " || ".join(
         f"lpad(CAST(({e}) AS VARCHAR), {_PAD}, '0')" for e in exprs
-    )
-
-
-def oracle_csum(expr: str, k: int = 2) -> str:
-    return (
-        f"CAST(SUM(CAST(round(({expr}) * {10**k}) AS BIGINT)) AS DOUBLE)"
-        f" / {float(10**k)}"
-    )
-
-
-def oracle_cavg(expr: str, k: int = 2) -> str:
-    return (
-        f"(CAST(SUM(CAST(round(({expr}) * {10**k}) AS BIGINT)) AS DOUBLE)"
-        f" / {float(10**k)}) / CAST(COUNT({expr}) AS DOUBLE)"
     )

@@ -89,11 +89,6 @@ def bag_fingerprint(text: Column | str) -> Column:
     return F.md5(F.concat_ws(" ", F.array_sort(distinct_tokens(text))))
 
 
-def exact_fingerprint(text: Column | str) -> Column:
-    """Whitespace-normalized exact-content fingerprint."""
-    return F.md5(F.lower(F.trim(F.regexp_replace(_c(text), " +", " "))))
-
-
 def simhash16(text: Column | str) -> Column:
     """16-bit SimHash over the distinct token set.
 

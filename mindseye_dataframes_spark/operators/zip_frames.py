@@ -416,10 +416,3 @@ def zip_frames(
     else:
         joined = joined.drop(ROW_INDEX)
     return joined
-
-
-def zip_local(columns: list[list], names: list[str]):
-    """Driver-side zip for tiny frames (parity with ``zipLocal``,
-    `DataframeModeler.scala:159-161`)."""
-    n = builtins.min(len(c) for c in columns)
-    return [dict(zip(names, vals)) for vals in zip(*[c[:n] for c in columns])]

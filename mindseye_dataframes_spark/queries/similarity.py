@@ -51,18 +51,11 @@ def q35_cosine_topk(spark, sf_dir):
     ).orderBy("query_id", "rank")
 
 
-def _planes_sql(planes: list[list[float]]) -> str:
-    rows = ", ".join(
-        "[" + ", ".join(repr(x) for x in row) + "]" for row in planes
-    )
-    return f"[{rows}]"
-
-
 def _ann_oracle() -> str:
     planes = lsh_planes(64, n_planes=8, seed=42)
     terms = []
     for i in range(8):
-        plane = "[" + ", ".join(repr(x) for x in lsh_planes(64, 8, 42)[i]) + "]"
+        plane = "[" + ", ".join(repr(x) for x in planes[i]) + "]"
         terms.append(
             f"CASE WHEN list_dot_product({plane}::DOUBLE[], v) > 0 THEN {2**i} ELSE 0 END"
         )

@@ -22,11 +22,6 @@ def write_parquet(
     writer.parquet(path)
 
 
-def write_noop(df: DataFrame) -> None:
-    """Execute the full plan, discard output (benchmark sink)."""
-    df.write.format("noop").mode("overwrite").save()
-
-
 def write_csv(
     df: DataFrame, path: str, mode: str = "overwrite", header: bool = True
 ) -> None:

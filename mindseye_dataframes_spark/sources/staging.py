@@ -42,12 +42,6 @@ def stage(df: DataFrame, tier: str = "working") -> DataFrame:
     return df.persist(level)
 
 
-def storage_level_of(df: DataFrame) -> StorageLevel:
-    """Current storage level (useMemory=False and useDisk=False when
-    the frame is not persisted)."""
-    return df.storageLevel
-
-
 STAGING_DIR_CONF = "spark.mindseye.stagingDir"
 
 

@@ -66,6 +66,11 @@ def test_window_is_exactly_refresh_plus_unproven_plus_stalest():
 
 
 def test_order_derived_from_synthetic_correctness_files(tmp_path):
+    names = ["a", "b", "c", "d", "e"]
+    # no CORRECTNESS files: plain name order
+    assert last_green(str(tmp_path)) == {}
+    assert window_order(reversed(names), {}, set()) == names
+
     rounds = {
         # r01: a green, b red (its first row)
         1: {"a": _row(True), "b": _row(False)},
@@ -85,14 +90,8 @@ def test_order_derived_from_synthetic_correctness_files(tmp_path):
     assert last == {"a": 1, "b": 3, "c": 4, "d": 4}
     # d: green but in REFRESH (heads); e: never proven (round 1, tied
     # with a's r01 row, so by name after a); then by last green round
-    names = ["a", "b", "c", "d", "e"]
     assert window_order(names, last, {"d"}) == ["d", "a", "e", "b", "c"]
     assert window_order(names, last, set()) == ["a", "e", "b", "c", "d"]
-
-
-def test_no_correctness_files_gives_name_order(tmp_path):
-    assert last_green(str(tmp_path)) == {}
-    assert window_order(["q2", "q10", "q1"], {}, set()) == ["q1", "q10", "q2"]
 
 
 def test_readme_query_count():

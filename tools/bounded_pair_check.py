@@ -168,18 +168,11 @@ def main() -> None:
         sys.exit(f"unknown probe keys {unknown}; known: {sorted(SPECS)}")
 
     import duckdb
-    from pyspark.sql import SparkSession
 
     from mindseye_dataframes_spark.queries import load_all
+    from mindseye_dataframes_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master("local[24]")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.shuffle.partitions", "24")
-        .config("spark.ui.showConsoleProgress", "false")
-        .appName("bounded-pair-check")
-        .getOrCreate()
-    )
+    spark = get_session(app_name="bounded-pair-check")
     reg = load_all()
 
     con = duckdb.connect()

@@ -71,15 +71,9 @@ def build_raw(spark):
 def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
-    from pyspark.sql import SparkSession
+    from mindseye_dataframes_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master("local[32]")
-        .config("spark.driver.memory", "48g")
-        .config("spark.sql.shuffle.partitions", "32")
-        .appName("covtype-probe")
-        .getOrCreate()
-    )
+    spark = get_session(app_name="covtype-probe")
     from mindseye_dataframes_spark.featurize import (
         CategorizingStrategy,
         DataframeModeler,

@@ -21,15 +21,9 @@ sys.path.insert(0, repo)
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    from pyspark.sql import SparkSession
+    from mindseye_dataframes_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master("local[24]")
-        .appName("noop-sweep")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
+    spark = get_session(app_name="noop-sweep")
     spark.sparkContext.setLogLevel("ERROR")
 
     from mindseye_dataframes_spark.queries import load_all

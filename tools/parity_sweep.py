@@ -147,23 +147,21 @@ def main() -> None:
     )
     only = tuple(s for s in args.only.split(",") if s)
 
-    from pyspark.sql import SparkSession
+    from mindseye_dataframes_spark.session import get_session
 
     def make_session():
-        return (
-            SparkSession.builder.master("local[24]")
-            .config("spark.driver.memory", "64g")
-            .config("spark.sql.shuffle.partitions", "24")
-            # q120's sf1 digest aggregate (6.5e8 rows) can stall the
-            # single local-mode JVM in long GC pauses; stock tolerances
-            # (10s heartbeats, 120s network timeout) declare the executor
-            # dead mid-aggregate and poison the rest of the chunk — give
-            # the heavy chunks the same survival margin the r11
-            # bounded-pair probe had, plus heap headroom over its 48g
-            .config("spark.network.timeout", "800s")
-            .config("spark.executor.heartbeatInterval", "30s")
-            .appName("parity-sweep")
-            .getOrCreate()
+        return get_session(
+            app_name="parity-sweep",
+            extra_conf={
+                # q120's sf1 digest aggregate (6.5e8 rows) can stall the
+                # single local-mode JVM in long GC pauses; stock
+                # tolerances (10s heartbeats, 120s network timeout)
+                # declare the executor dead mid-aggregate and poison the
+                # rest of the chunk — give the heavy chunks the same
+                # survival margin the r11 bounded-pair probe had
+                "spark.network.timeout": "800s",
+                "spark.executor.heartbeatInterval": "30s",
+            },
         )
 
     spark = make_session()

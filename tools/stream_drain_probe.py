@@ -112,19 +112,17 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 5
 
-    from pyspark.sql import SparkSession
+    from mindseye_dataframes_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master("local[24]")
-        .appName("stream-drain-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        # default 60s: with ~5 drains of 20-50s each, providers from
-        # FINISHED queries outlive several timed runs and their heap
-        # bills the successors (the r11 sf1 series CLIMBED 18→49 s
-        # run-over-run); a short cycle unloads them between runs
-        .config("spark.sql.streaming.stateStore.maintenanceInterval", "5s")
-        .getOrCreate()
+    spark = get_session(
+        app_name="stream-drain-probe",
+        extra_conf={
+            # default 60s: with ~5 drains of 20-50s each, providers from
+            # FINISHED queries outlive several timed runs and their heap
+            # bills the successors (the r11 sf1 series CLIMBED 18→49 s
+            # run-over-run); a short cycle unloads them between runs
+            "spark.sql.streaming.stateStore.maintenanceInterval": "5s",
+        },
     )
     spark.sparkContext.setLogLevel("ERROR")
     # untimed settle between runs: one maintenance cycle + GC, so each

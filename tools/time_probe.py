@@ -33,15 +33,9 @@ def main() -> None:
     # based probe numbers stay comparable
     use_noop = os.environ.get("NOOP", "") == "1"
 
-    from pyspark.sql import SparkSession
+    from mindseye_dataframes_spark.session import get_session
 
-    spark = (
-        SparkSession.builder.master("local[24]")
-        .appName("time-probe")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.driver.memory", "48g")
-        .getOrCreate()
-    )
+    spark = get_session(app_name="time-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
     from mindseye_dataframes_spark.queries import load_all
