@@ -34,7 +34,13 @@ from mindseye_dataframes_spark.plans.parallelism import (
     spread_for_compute,
 )
 
+
 def _py_features(feature: str):
+    """Per-doc feature set for similarity: 'shingles' (word 3-grams —
+    order-sensitive, discriminative even on tiny vocabularies) or
+    'tokens' (order-insensitive bag). Shingles are the default: on a
+    31-word vocabulary token-set jaccard has a ~0.65 baseline between
+    *unrelated* docs, so token-level LSH degenerates to all-pairs."""
     if feature == "shingles":
         return py_shingles
     if feature == "tokens":
