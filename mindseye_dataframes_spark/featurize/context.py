@@ -8,9 +8,10 @@ two maps keyed by hierarchical path strings —
 - ``transforms``: numeric path → affine/FC weights (F2)
 
 plus ``layers`` for network parameters. Parameters are plain numpy
-arrays; param identity is the deterministic name-UUID of the key
-(`DataframeModeler.scala:213-215`), so gradients can be routed by id
-exactly like the reference's DeltaSet accumulation
+arrays; param identity is the key string itself (the reference's
+name-UUID, `DataframeModeler.scala:213-215`, is a 1:1 function of
+it), so gradients are routed by key exactly like the reference's
+DeltaSet accumulation
 (`DataframeModeler.scala:192-211`).
 
 Unlike the reference — which re-discovers keys on every eval
@@ -24,8 +25,6 @@ from __future__ import annotations
 
 import numpy as np
 
-from mindseye_dataframes_spark.functions.hashing import name_uuid, seeded_unit_rms_tensor
-
 
 class ModelContext:
     def __init__(self) -> None:
@@ -38,21 +37,6 @@ class ModelContext:
     # -- param access -------------------------------------------------
     def all_params(self) -> dict[str, np.ndarray]:
         return {**self.representations, **self.transforms, **self.layers}
-
-    def uuid_map(self) -> dict[str, str]:
-        """key → deterministic param UUID (reference `uuidMap`)."""
-        return {k: name_uuid(k) for k in self.all_params()}
-
-    def representation(self, key: str, size: int) -> np.ndarray:
-        """Lookup-or-init (reference `DataframeModeler.scala:54-59`):
-        unseen categorical keys get a deterministic seeded unit-RMS
-        embedding, so eval never fails on novel values and every
-        executor initializes identically without coordination."""
-        found = self.representations.get(key)
-        if found is None:
-            found = seeded_unit_rms_tensor(key, size)
-            self.representations[key] = found
-        return found
 
     def apply_gradients(self, grads: dict[str, np.ndarray], lr: float) -> None:
         params = self.all_params()

@@ -85,6 +85,18 @@ def _render_values(col: pd.Series, dtype: str) -> list:
     return out
 
 
+def _label_channel(chans: list[Channel], label_col: str) -> Channel:
+    """The channel of ``label_col``, found from the schema alone, so a
+    misspelled label fails before any Spark job runs."""
+    found = next((c for c in chans if c.col == label_col), None)
+    if found is None:
+        raise ValueError(
+            f"label column {label_col!r} not found; featurizable columns: "
+            f"{[c.col for c in chans]}"
+        )
+    return found
+
+
 class DictionaryOverflowError(RuntimeError):
     """A categorical path's distinct-value dictionary exceeds the
     configured driver cap and on_dictionary_overflow='error'."""
@@ -313,10 +325,6 @@ class DataframeModeler:
                     # unit-RMS inputs (same convention as transforms)
                     self.context.transforms[key] = init / np.sqrt(d)
 
-        if label_col is not None:
-            # dimension probe happens via strategy.size on the label path
-            pass
-
     # -- featurization (executed inside mapInPandas) -------------------
     @staticmethod
     def _featurize(
@@ -470,7 +478,7 @@ class DataframeModeler:
         chans = self.channels(
             T.StructType([f for f in df.schema.fields if f.name not in passthrough])
         )
-        skip = {c.path for c in chans if label_col and c.col == label_col}
+        skip = {_label_channel(chans, label_col).path} if label_col else set()
         if not self.context.stats and not self.context.representations:
             self.init_keys(df)
         spark = df.sparkSession
@@ -530,7 +538,7 @@ class DataframeModeler:
         per optimizer step. ``params_override`` evaluates a trial
         parameter set without mutating the context."""
         chans = self.channels(df.schema)
-        label_chan = next(c for c in chans if c.col == label_col)
+        label_chan = _label_channel(chans, label_col)
         skip = {label_chan.path}
         spark = df.sparkSession
         eval_params = (
@@ -701,9 +709,7 @@ class DataframeModeler:
         max_iters: int = 10,
         lr: float = 0.1,
         seed: int = 42,
-        line_search: bool = True,
         max_probes: int = 3,
-        verbose: bool = False,
     ) -> list[float]:
         """Epoch schedule over sample fractions with gradient descent
         and a bisection line search per step, mirroring the reference's
@@ -717,6 +723,7 @@ class DataframeModeler:
         confirmed it improves the (deterministic) batch loss."""
         from mindseye_dataframes_spark.sources.staging import stage
 
+        _label_channel(self.channels(df.schema), label_col)
         if not self.context.representations and not self.context.stats:
             self.init_keys(df, label_col)
         for key, arr in network.init_params().items():
@@ -731,14 +738,11 @@ class DataframeModeler:
                 for _ in range(max_iters):
                     loss, grads = self.eval(batch, network, label_col)
                     losses.append(loss)
-                    if verbose:
-                        print(f"epoch {epoch} fraction {fraction} loss {loss:.5f}")
-                    if line_search:
-                        step = self._line_search(
-                            batch, network, label_col, grads, loss, step, max_probes
-                        )
-                        if step == 0.0:
-                            break  # no improving step on this batch
+                    step = self._line_search(
+                        batch, network, label_col, grads, loss, step, max_probes
+                    )
+                    if step == 0.0:
+                        break  # no improving step on this batch
                     self.context.apply_gradients(grads, step)
             finally:
                 batch.unpersist()

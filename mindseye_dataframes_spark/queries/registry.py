@@ -29,8 +29,9 @@ class Query:
     # extra row moves it; n·2^32 < 2^63 keeps the BIGINT sum exact for
     # n < 2^31 rows). Columns must be non-null int/string. Below the
     # threshold the standard exact value compare runs unchanged — the
-    # driver's sf0.01 gate never engages this. Same reduction the
-    # r9-r11 sf1 value evidence used (tools/bounded_pair_check.py).
+    # driver's sf0.01 gate never engages this. Run by
+    # tests/helpers.py:assert_matches_oracle_bounded, reached from
+    # tools/parity_sweep.py.
     # {"cols": [...], "metric": "...", "threshold_rows": int}
     bounded_compare: dict | None = None
 

@@ -112,32 +112,22 @@ def _bounded_spark_agg(spark_df, spec: dict) -> tuple:
     ~900 s of pure GC pressure at sf1)."""
     import pyspark.sql.functions as F
 
-    cols, metric = spec["cols"], spec["metric"]
-    joined = ", ".join(cols)
-    sp_digest = F.expr(
-        f"CAST(conv(substr(md5(concat_ws(':', {joined})), 1, 8), 16, 10)"
-        " AS BIGINT)"
-    )
-    # second INDEPENDENT digest (disjoint md5 prefix, chars 9-16):
-    # compensating per-row collisions would have to cancel in both
-    # 2^32-bucket sums simultaneously (~2^-64), closing the ADVICE r12
-    # gap between bounded and exact evidence
-    sp_digest2 = F.expr(
-        f"CAST(conv(substr(md5(concat_ws(':', {joined})), 9, 8), 16, 10)"
-        " AS BIGINT)"
-    )
+    joined = ", ".join(spec["cols"])
+    # two INDEPENDENT digests (disjoint md5 prefixes, chars 1-8 and
+    # 9-16): compensating per-row collisions would have to cancel in
+    # both 2^32-bucket sums simultaneously (~2^-64), closing the ADVICE
+    # r12 gap between bounded and exact evidence
+    digests = [
+        F.expr(
+            f"CAST(conv(substr(md5(concat_ws(':', {joined})), {start}, 8),"
+            " 16, 10) AS BIGINT)"
+        )
+        for start in (1, 9)
+    ]
     srow = spark_df.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(metric).alias("sum_metric"),
-        F.sum(sp_digest).alias("checksum"),
-        F.sum(sp_digest2).alias("checksum2"),
+        F.count(F.lit(1)), F.sum(spec["metric"]), *[F.sum(d) for d in digests]
     ).collect()[0]
-    return (
-        int(srow["n_rows"]),
-        int(srow["sum_metric"] or 0),
-        int(srow["checksum"] or 0),
-        int(srow["checksum2"] or 0),
-    )
+    return tuple(int(v or 0) for v in srow)
 
 
 def assert_matches_oracle_bounded(
@@ -154,9 +144,10 @@ def assert_matches_oracle_bounded(
     2^32-bucket md5 digests of the spec's columns — any changed,
     missing, or extra row moves the checksum, and n·2^32 < 2^63 keeps
     the BIGINT sum exact below 2^31 rows. Column names are still
-    checked (DESCRIBE plans the oracle without running it). This is
-    the same reduction tools/bounded_pair_check.py proved engine-equal
-    at sf1 in rounds 9-11; requires non-null int/string columns.
+    checked (DESCRIBE plans the oracle without running it).
+    ``tools/parity_sweep.py`` reaches it through a query's spec, which
+    is how q120's sf1 values are checked; requires non-null int/string
+    columns.
     ``spark_agg`` lets the caller pass an already-computed Spark-side
     triple so the relation is never executed twice. Digest parity pair
     (verify-skill gotcha): Spark ``conv(substr(md5(x),1,8),16,10)``
@@ -197,23 +188,18 @@ def assert_matches_oracle_bounded(
         else:
             rel_sql = oracle_sql
         db_joined = " || ':' || ".join(cols)
+        digest_sums = ", ".join(
+            f"CAST(sum(CAST(('0x' || substr(md5({db_joined}), {start}, 8))"
+            " AS BIGINT)) AS BIGINT)"
+            for start in (1, 9)
+        )
         orow = con.execute(
-            f"WITH rel AS ({rel_sql}) SELECT"
-            f" CAST(count(*) AS BIGINT),"
-            f" CAST(sum({metric}) AS BIGINT),"
-            f" CAST(sum(CAST(('0x' || substr(md5({db_joined}), 1, 8))"
-            f" AS BIGINT)) AS BIGINT),"
-            f" CAST(sum(CAST(('0x' || substr(md5({db_joined}), 9, 8))"
-            f" AS BIGINT)) AS BIGINT) FROM rel"
+            f"WITH rel AS ({rel_sql}) SELECT CAST(count(*) AS BIGINT),"
+            f" CAST(sum({metric}) AS BIGINT), {digest_sums} FROM rel"
         ).fetchone()
     finally:
         con.close()
-    want = (
-        int(orow[0]),
-        int(orow[1] or 0),
-        int(orow[2] or 0),
-        int(orow[3] or 0),
-    )
+    want = tuple(int(v or 0) for v in orow)
     assert got == want, (
         f"{name}: bounded aggregates differ "
         f"(n_rows, sum_{metric}, checksum, checksum2): "
@@ -278,3 +264,60 @@ def assert_matches_oracle(
         + f"\n  (columns: {sp_cols_c})"
     )
     return "exact"
+
+
+COVTYPE_LABELS = 7
+
+
+def covtype_raw(spark, n_rows: int, n_soil: int):
+    """The reference's covtype_raw table (FIXTURES §1.1), synthesized:
+    10 integer measurements, 4 Wilderness_Area and ``n_soil``
+    Soil_Type flags, and a Cover_Type label correlated with elevation
+    so training has signal. Every value is hashed from the row id, so
+    the table does not depend on partitioning."""
+    from pyspark.sql import functions as F
+
+    h = lambda i: F.abs(F.xxhash64("id", F.lit(i)))  # noqa: E731
+    return spark.range(n_rows).select(
+        (h(1) % 2000 + 1000).cast("int").alias("Elevation"),
+        (h(2) % 360).cast("int").alias("Aspect"),
+        (h(3) % 60).cast("int").alias("Slope"),
+        (h(4) % 1000).cast("int").alias("Horizontal_Distance_To_Hydrology"),
+        (h(5) % 500).cast("int").alias("Vertical_Distance_To_Hydrology"),
+        (h(6) % 4000).cast("int").alias("Horizontal_Distance_To_Roadways"),
+        (h(7) % 255).cast("int").alias("Hillshade_9am"),
+        (h(8) % 255).cast("int").alias("Hillshade_Noon"),
+        (h(9) % 255).cast("int").alias("Hillshade_3pm"),
+        (h(10) % 5000).cast("int").alias("Horizontal_Distance_To_Fire_Points"),
+        *[(h(20 + i) % 2).cast("int").alias(f"Wilderness_Area{i}") for i in range(1, 5)],
+        *[(h(30 + i) % 2).cast("int").alias(f"Soil_Type{i}") for i in range(1, n_soil + 1)],
+        F.least(
+            F.greatest(((h(1) % 2000) * 7 / 2000 + 1).cast("int"), F.lit(1)),
+            F.lit(COVTYPE_LABELS),
+        ).alias("Cover_Type"),
+    )
+
+
+def covtype_staging_view(spark, raw):
+    """Register ``raw`` as ``covtype_raw`` and stage it through the
+    generated ``CREATE TEMPORARY VIEW covtype`` exactly like
+    `Trainer.scala:100-116` — a schema walk that drops Soil_Type*,
+    casts every feature to DOUBLE and keeps the label. Returns the
+    ``covtype`` view."""
+    from mindseye_dataframes_spark.repl import SqlRepl
+
+    raw.createOrReplaceTempView("covtype_raw")
+    select_list = []
+    for field in raw.schema.fields:
+        if field.name.startswith("Soil_Type"):
+            continue
+        if field.name == "Cover_Type":
+            select_list.append(f"`{field.name}`")
+        else:
+            select_list.append(f"CAST(`{field.name}` AS DOUBLE) AS `{field.name}`")
+    SqlRepl(spark).run(
+        "%sql CREATE OR REPLACE TEMPORARY VIEW covtype AS SELECT "
+        + ", ".join(select_list)
+        + " FROM covtype_raw"
+    )
+    return spark.table("covtype")

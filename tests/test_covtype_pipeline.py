@@ -16,56 +16,17 @@ from pyspark.sql import functions as F
 from mindseye_dataframes_spark.featurize import CategorizingStrategy, DataframeModeler
 from mindseye_dataframes_spark.featurize.layers import mlp
 from mindseye_dataframes_spark.operators.zip_frames import zip_frames
-from mindseye_dataframes_spark.repl import SqlRepl
+from tests.helpers import COVTYPE_LABELS as LABELS
+from tests.helpers import covtype_raw, covtype_staging_view
 
 N_SOIL = 8  # reference has 40; 8 keeps the fixture fast with identical shape
-LABELS = 7
 
 
 @pytest.fixture(scope="module")
 def covtype_staged(spark):
-    """covtype_raw (FIXTURES §1.1, hash-derived → partitioning-proof)
-    staged through the generated CREATE TEMPORARY VIEW exactly like
+    """covtype_raw staged through the generated view like
     `Trainer.scala:100-116` (drop Soil_Type*, cast ints, keep label)."""
-    df = spark.range(3000)
-    h = lambda i: F.abs(F.xxhash64("id", F.lit(i)))
-    cols = [
-        (h(1) % 2000 + 1000).cast("int").alias("Elevation"),
-        (h(2) % 360).cast("int").alias("Aspect"),
-        (h(3) % 60).cast("int").alias("Slope"),
-        (h(4) % 1000).cast("int").alias("Horizontal_Distance_To_Hydrology"),
-        (h(5) % 500).cast("int").alias("Vertical_Distance_To_Hydrology"),
-        (h(6) % 4000).cast("int").alias("Horizontal_Distance_To_Roadways"),
-        (h(7) % 255).cast("int").alias("Hillshade_9am"),
-        (h(8) % 255).cast("int").alias("Hillshade_Noon"),
-        (h(9) % 255).cast("int").alias("Hillshade_3pm"),
-        (h(10) % 5000).cast("int").alias("Horizontal_Distance_To_Fire_Points"),
-        *[(h(20 + i) % 2).cast("int").alias(f"Wilderness_Area{i}") for i in range(1, 5)],
-        *[(h(30 + i) % 2).cast("int").alias(f"Soil_Type{i}") for i in range(1, N_SOIL + 1)],
-        # label correlated with elevation so training has signal
-        F.least(
-            F.greatest(((h(1) % 2000) * 7 / 2000 + 1).cast("int"), F.lit(1)),
-            F.lit(LABELS),
-        ).alias("Cover_Type"),
-    ]
-    raw = df.select(*cols)
-    raw.createOrReplaceTempView("covtype_raw")
-
-    label = "Cover_Type"
-    select_list = []
-    for field in raw.schema.fields:  # schema walk like the reference
-        if field.name.startswith("Soil_Type"):
-            continue
-        if field.name == label:
-            select_list.append(f"`{field.name}`")
-        else:
-            select_list.append(f"CAST(`{field.name}` AS DOUBLE) AS `{field.name}`")
-    SqlRepl(spark).run(
-        "%sql CREATE OR REPLACE TEMPORARY VIEW covtype AS SELECT "
-        + ", ".join(select_list)
-        + " FROM covtype_raw"
-    )
-    return spark.table("covtype")
+    return covtype_staging_view(spark, covtype_raw(spark, 3000, N_SOIL))
 
 
 def test_staging_view_schema(spark, covtype_staged):

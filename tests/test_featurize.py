@@ -164,6 +164,25 @@ def test_training_loss_decreases(spark):
     assert losses[-1] < losses[0], losses
 
 
+def test_missing_label_fails_before_any_spark_job(spark):
+    """A misspelled label is a ValueError naming the label and the
+    columns that exist, raised from the schema before ``fit`` runs
+    key discovery (or any other Spark job)."""
+    df = spark.createDataFrame([(1.0, "X")], "x double, label string")
+    modeler = DataframeModeler(ModelingStrategy(default_size=4))
+    sc = spark.sparkContext
+    sc.setJobGroup("missing-label", "fit with a misspelled label")
+    try:
+        with pytest.raises(ValueError, match=r"'lable'.*\['x', 'label'\]"):
+            modeler.fit(df, mlp("m", 4, [], 2), "lable")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("missing-label") == []
+    assert not modeler.context.representations and not modeler.context.stats
+    with pytest.raises(ValueError, match="'lable'"):
+        modeler.eval_to_dataframe(df, "f", label_col="lable")
+
+
 def test_context_save_load_roundtrip(spark, tmp_path):
     ctx = ModelContext()
     ctx.representations["a=1"] = np.arange(4.0)

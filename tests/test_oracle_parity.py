@@ -81,6 +81,12 @@ def test_bounded_compare_stays_exact_below_threshold(spark, sf_dir):
             tampered, q.oracle, sf_dir, name="q120",
             bounded=q.bounded_compare,  # real threshold: stays exact
         )
+    # the same real relation and oracle with the threshold at 0 take
+    # the aggregate-checksum path
+    spec = dict(q.bounded_compare, threshold_rows=0)
+    assert assert_matches_oracle(
+        df, q.oracle, sf_dir, name="q120", bounded=spec
+    ) == "bounded"
 
 
 def test_bounded_compare_refuses_unsafe_order_by_strip(spark, sf_dir):

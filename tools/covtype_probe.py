@@ -5,7 +5,7 @@ epoch schedule, fractions 0.005, 0.01, 0.01, 0.05, 0.05, 0.1
 (`Trainer.scala:71`), and record the loss curve + wall time per epoch.
 
 The data is the same hash-derived synthetic covtype the pytest
-fixture uses (tests/test_covtype_pipeline.py — deterministic,
+fixture uses (tests/helpers.py:covtype_raw — deterministic,
 partitioning-proof, label correlated with elevation so training has
 signal), at full scale with all 40 Soil_Type columns so the staging
 schema walk drops exactly what the reference drops
@@ -32,40 +32,7 @@ import time
 
 N_ROWS = 581_012  # CovType_Trainer.scala:24
 N_SOIL = 40
-LABELS = 7
 FRACTIONS = [0.005, 0.01, 0.01, 0.05, 0.05, 0.1]  # Trainer.scala:71
-
-
-def build_raw(spark):
-    from pyspark.sql import functions as F
-
-    df = spark.range(N_ROWS)
-    h = lambda i: F.abs(F.xxhash64("id", F.lit(i)))  # noqa: E731
-    cols = [
-        (h(1) % 2000 + 1000).cast("int").alias("Elevation"),
-        (h(2) % 360).cast("int").alias("Aspect"),
-        (h(3) % 60).cast("int").alias("Slope"),
-        (h(4) % 1000).cast("int").alias("Horizontal_Distance_To_Hydrology"),
-        (h(5) % 500).cast("int").alias("Vertical_Distance_To_Hydrology"),
-        (h(6) % 4000).cast("int").alias("Horizontal_Distance_To_Roadways"),
-        (h(7) % 255).cast("int").alias("Hillshade_9am"),
-        (h(8) % 255).cast("int").alias("Hillshade_Noon"),
-        (h(9) % 255).cast("int").alias("Hillshade_3pm"),
-        (h(10) % 5000).cast("int").alias("Horizontal_Distance_To_Fire_Points"),
-        *[
-            (h(20 + i) % 2).cast("int").alias(f"Wilderness_Area{i}")
-            for i in range(1, 5)
-        ],
-        *[
-            (h(30 + i) % 2).cast("int").alias(f"Soil_Type{i}")
-            for i in range(1, N_SOIL + 1)
-        ],
-        F.least(
-            F.greatest(((h(1) % 2000) * 7 / 2000 + 1).cast("int"), F.lit(1)),
-            F.lit(LABELS),
-        ).alias("Cover_Type"),
-    ]
-    return df.select(*cols)
 
 
 def main() -> None:
@@ -79,28 +46,13 @@ def main() -> None:
         DataframeModeler,
     )
     from mindseye_dataframes_spark.featurize.layers import mlp
-    from mindseye_dataframes_spark.repl import SqlRepl
     from mindseye_dataframes_spark.sources.staging import stage
+    from tests.helpers import COVTYPE_LABELS as LABELS
+    from tests.helpers import covtype_raw, covtype_staging_view
 
-    raw = build_raw(spark)
+    raw = covtype_raw(spark, N_ROWS, N_SOIL)
     assert len(raw.columns) == 55, len(raw.columns)
-    raw.createOrReplaceTempView("covtype_raw")
-
-    # generated staging view, exactly like Trainer.scala:100-116
-    select_list = []
-    for field in raw.schema.fields:
-        if field.name.startswith("Soil_Type"):
-            continue
-        if field.name == "Cover_Type":
-            select_list.append(f"`{field.name}`")
-        else:
-            select_list.append(f"CAST(`{field.name}` AS DOUBLE) AS `{field.name}`")
-    SqlRepl(spark).run(
-        "%sql CREATE OR REPLACE TEMPORARY VIEW covtype AS SELECT "
-        + ", ".join(select_list)
-        + " FROM covtype_raw"
-    )
-    staged = stage(spark.table("covtype"), "raw")  # DISK_ONLY, Trainer.scala:94
+    staged = stage(covtype_staging_view(spark, raw), "raw")  # DISK_ONLY, Trainer.scala:94
     n = staged.count()
     print(f"staged {n} rows x {len(staged.columns)} cols", flush=True)
 
@@ -166,16 +118,11 @@ def main() -> None:
         "total_wall_sec": round(time.time() - t_total, 1),
     }
     path = os.path.join(repo, "docs", "probes", "covtype_probe.json")
-    # accumulate shapes side by side (migrating the legacy flat layout,
-    # which was the [20] run, into probes["mid_20"])
+    # accumulate shapes side by side
     doc: dict = {"probes": {}}
     try:
         with open(path) as fh:
-            prev = json.load(fh)
-        if "probes" in prev:
-            doc = prev
-        elif "epochs" in prev:
-            doc["probes"]["mid_20"] = {**prev, "mid_layers": [20]}
+            doc = json.load(fh)
     except (OSError, ValueError):
         pass
     doc["probes"][f"mid_{'x'.join(str(m) for m in mid_layers)}"] = out

@@ -26,7 +26,14 @@ ModuleNotFoundError inside pandas UDFs):
     python tools/parity_sweep.py /root/testdata/sf0.1 0 40
     python tools/parity_sweep.py /root/testdata/sf0.1 40 80
     python tools/parity_sweep.py /root/testdata/sf1 --only q101,q165,q168
+    python tools/parity_sweep.py benchdata/sf1 --only q120,q213,q226
     ...
+
+The last line is the sf1 value check of the output- and compare-bound
+pair queries: q120's result outgrows a driver collect, so its
+registered ``bounded_compare`` spec compares engine-side aggregate
+checksums (``tests/helpers.py:assert_matches_oracle_bounded``); q213
+and q226 run the exact compare.
 
 Chunked by [lo, hi) registry index so each invocation stays inside a
 CI step timeout; prints one line per query and a final FAILS list.
@@ -68,27 +75,20 @@ def derived_guard_spec(df, guard_rows: int, name: str = "query"):
         (n for n, t in fields if t in _DIGESTABLE and t != "string"), None
     )
 
-    class _GuardSpec(dict):
-        pass
-
     if bad or metric is None:
         # non-digestable schema: still guard the collect. The spec
         # carries a poison marker the sweep checks AFTER the engage
         # decision (the count aggregate) — raising there, before any
         # collect, keeps the session alive.
-        spec = _GuardSpec(
+        return dict(
             cols=[], metric="", threshold_rows=guard_rows,
             refuse=f"{name}: result exceeds guard-rows and schema has "
             f"non-digestable columns {bad or '(no integral metric)'} — "
             "register a bounded_compare spec",
         )
-    else:
-        spec = _GuardSpec(
-            cols=[n for n, _ in fields],
-            metric=metric,
-            threshold_rows=guard_rows,
-        )
-    return spec
+    return dict(
+        cols=[n for n, _ in fields], metric=metric, threshold_rows=guard_rows
+    )
 
 
 def main() -> None:
@@ -99,12 +99,6 @@ def main() -> None:
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
     ap.add_argument("lo", nargs="?", type=int, default=0)
     ap.add_argument("hi", nargs="?", type=int, default=10**9)
-    ap.add_argument(
-        "skip_pos",
-        nargs="?",
-        default="",
-        help="legacy positional skip list (comma-separated name prefixes)",
-    )
     ap.add_argument(
         "--skip",
         default="",
@@ -142,9 +136,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    skip = tuple(
-        s for s in (args.skip or args.skip_pos).split(",") if s
-    )
+    skip = tuple(s for s in args.skip.split(",") if s)
     only = tuple(s for s in args.only.split(",") if s)
 
     from mindseye_dataframes_spark.session import get_session
@@ -157,8 +149,8 @@ def main() -> None:
                 # single local-mode JVM in long GC pauses; stock
                 # tolerances (10s heartbeats, 120s network timeout)
                 # declare the executor dead mid-aggregate and poison the
-                # rest of the chunk — give the heavy chunks the same
-                # survival margin the r11 bounded-pair probe had
+                # rest of the chunk — give the heavy chunks a survival
+                # margin
                 "spark.network.timeout": "800s",
                 "spark.executor.heartbeatInterval": "30s",
             },
@@ -180,7 +172,6 @@ def main() -> None:
         names = [n for n in names if any(n.startswith(o) for o in only)]
 
     fails, skipped, results = [], [], {}
-    session_restarts = []
     t_start = time.time()
     for name in names:
         if any(name.startswith(s) for s in skip):
@@ -220,7 +211,6 @@ def main() -> None:
             except Exception:
                 pass
             spark = make_session()
-            session_restarts.append(name)
             print(f"  [session restarted after {name}]", flush=True)
         sec = round(time.time() - t0, 1)
         results[name] = {"status": status, "sec": sec}

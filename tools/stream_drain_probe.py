@@ -37,6 +37,7 @@ Writes docs/probes/stream_drain_<sfname>.json.
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import shutil
@@ -44,23 +45,8 @@ import statistics
 import sys
 import time
 
-
-def _stats(runs):
-    """Median + two spread measures: max/min (brittle — one co-tenant
-    burst moves it) and the IQR ratio p75/p25 (robust for n=5; the
-    regression-tracking band). Both recorded so the artifact shows
-    whether an outlier or the distribution moved."""
-    s = sorted(runs)
-    n = len(s)
-    p25 = s[max(0, int(round(0.25 * (n - 1))))]
-    p75 = s[min(n - 1, int(round(0.75 * (n - 1))))]
-    return {
-        "median": round(statistics.median(s), 2),
-        "min": min(s),
-        "spread_max_over_min": round(max(s) / min(s), 2),
-        "iqr_ratio_p75_over_p25": round(p75 / p25, 2),
-        "runs": runs,
-    }
+# untimed settle between runs: one state-store maintenance cycle
+SETTLE_SEC = 8.0
 
 
 def _jvm_gc(spark) -> None:
@@ -105,6 +91,43 @@ def _warm_to_steady(run, *, max_warm: int = 6, tol: float = 0.10):
     return warm
 
 
+def _time_family(spark, kind, stage, run, n_runs):
+    """Stage once, warm ``run`` to steady, then time it ``n_runs``
+    times, each after a JVM GC and an untimed settle so every timed run
+    starts from the same unloaded-provider state. ``run`` takes a tag
+    that is unique per call. The record keeps the median, the min and
+    two spread measures: max/min (brittle — one co-tenant burst moves
+    it) and the IQR ratio p75/p25 (robust for n=5; the
+    regression-tracking band), so the artifact shows whether an
+    outlier or the distribution moved."""
+    t0 = time.monotonic()
+    stage()
+    t_stage = round(time.monotonic() - t0, 2)
+    warm_tags = (f"w{i}" for i in itertools.count())
+    warm = _warm_to_steady(lambda: run(next(warm_tags)))
+    runs = []
+    for i in range(n_runs):
+        _jvm_gc(spark)
+        time.sleep(SETTLE_SEC)
+        t0 = time.monotonic()
+        run(f"probe{i}")
+        runs.append(round(time.monotonic() - t0, 2))
+    s = sorted(runs)
+    p25 = s[max(0, int(round(0.25 * (len(s) - 1))))]
+    p75 = s[min(len(s) - 1, int(round(0.75 * (len(s) - 1))))]
+    record = {
+        "stage_once": t_stage,
+        "warmup_runs": warm,
+        f"{kind}_median": round(statistics.median(s), 2),
+        f"{kind}_min": s[0],
+        "spread_max_over_min": round(s[-1] / s[0], 2),
+        "iqr_ratio_p75_over_p25": round(p75 / p25, 2),
+        "runs": runs,
+    }
+    print(kind, record, flush=True)
+    return record
+
+
 def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
@@ -125,9 +148,6 @@ def main() -> None:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    # untimed settle between runs: one maintenance cycle + GC, so each
-    # timed run starts from the same unloaded-provider state
-    settle_sec = 8.0
 
     from mindseye_dataframes_spark.queries.similarity import (
         ann_ckpt_fold,
@@ -140,70 +160,31 @@ def main() -> None:
 
     # --- q228: stage once, drain N times -------------------------------
     src = staging_dir(spark, "msdf_probe_oj_")
-    try:
-        t0 = time.monotonic()
-        oj_stage(spark, sf_dir, src)
-        t_stage = round(time.monotonic() - t0, 2)
-        def _one_drain():
-            assert oj_drain(spark, src, timeout_sec=300).count() > 0
-            _drop_probe_views(spark, "q228_oj_")
 
-        warm = _warm_to_steady(_one_drain)
-        runs = []
-        for _ in range(n_runs):
-            _jvm_gc(spark)
-            time.sleep(settle_sec)
-            t0 = time.monotonic()
-            _one_drain()
-            runs.append(round(time.monotonic() - t0, 2))
-        st = _stats(runs)
-        out["results"]["q228_drain"] = {
-            "stage_once": t_stage,
-            "warmup_runs": warm,
-            "drain_median": st["median"],
-            "drain_min": st["min"],
-            "spread_max_over_min": st["spread_max_over_min"],
-            "iqr_ratio_p75_over_p25": st["iqr_ratio_p75_over_p25"],
-            "runs": runs,
-        }
-        print("q228", out["results"]["q228_drain"], flush=True)
+    def drain(_tag):
+        assert oj_drain(spark, src, timeout_sec=300).count() > 0
+        _drop_probe_views(spark, "q228_oj_")
+
+    try:
+        out["results"]["q228_drain"] = _time_family(
+            spark, "drain", lambda: oj_stage(spark, sf_dir, src), drain, n_runs
+        )
     finally:
         shutil.rmtree(src, ignore_errors=True)
 
-    # --- q218: stage the log once, fold N times (fresh fp per run) -----
+    # --- q218: stage the log once, fold N times ------------------------
     root = staging_dir(spark, "msdf_probe_annckpt_")
     post_log = f"{root}/postings"
+
+    def fold(tag):
+        # a distinct salt per run makes each one a real fold + publish
+        assert ann_ckpt_fold(spark, sf_dir, post_log, salt=f":{tag}").count() > 0
+
     try:
-        t0 = time.monotonic()
-        ann_ckpt_stage_log(spark, sf_dir, post_log)
-        t_stage = round(time.monotonic() - t0, 2)
-        # warm-up (distinct salt per run so each performs a real fold)
-        salt_seq = iter(range(1000))
-
-        def _one_fold():
-            s = f":w{next(salt_seq)}"
-            assert ann_ckpt_fold(spark, sf_dir, post_log, salt=s).count() > 0
-
-        warm = _warm_to_steady(_one_fold)
-        runs = []
-        for i in range(n_runs):
-            _jvm_gc(spark)
-            time.sleep(settle_sec)
-            t0 = time.monotonic()
-            probe = ann_ckpt_fold(spark, sf_dir, post_log, salt=f":probe{i}")
-            assert probe.count() > 0
-            runs.append(round(time.monotonic() - t0, 2))
-        st = _stats(runs)
-        out["results"]["q218_fold"] = {
-            "stage_once": t_stage,
-            "warmup_runs": warm,
-            "fold_median": st["median"],
-            "fold_min": st["min"],
-            "spread_max_over_min": st["spread_max_over_min"],
-            "iqr_ratio_p75_over_p25": st["iqr_ratio_p75_over_p25"],
-            "runs": runs,
-        }
-        print("q218", out["results"]["q218_fold"], flush=True)
+        out["results"]["q218_fold"] = _time_family(
+            spark, "fold", lambda: ann_ckpt_stage_log(spark, sf_dir, post_log),
+            fold, n_runs,
+        )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 

@@ -1,15 +1,21 @@
 """Min-of-N wall-clock probe for registry queries — the tool behind
 the README's sf0.1 → sf1 scale tables. Engine side only (no oracle):
-each query's fn runs against the given sf_dir and is drained with
-count(); the per-query minimum over N runs is reported, with run 0
+each query's fn runs against the given sf_dir and is drained through
+the noop sink (count() would let the optimizer prune columns and
+subtrees, so noop is the honest operator cost); run 0 is reported
 separately (the cold number — standing-table builds, first-touch
 JIT/codegen) and the min over the remaining runs as warm.
 
+``all`` in place of the name list times every registry query in
+sorted order (the optimization-round coverage sweep); a query that
+raises is recorded as ``FAIL <message>`` and the loop goes on.
+
 Usage (from the repo root, like parity_sweep):
 
-    python tools/time_probe.py /root/testdata/sf0.1 q212_...,q213_... [N]
+    python tools/time_probe.py <sf_dir> q212_...,q213_... [N]
+    python tools/time_probe.py <sf_dir> all 1
 
-Writes docs/probes/time_<sfname>_<first>_<n>q.json.
+Writes docs/probes/time_<sfname>_<first|all>_<n>q.json.
 """
 
 from __future__ import annotations
@@ -20,56 +26,64 @@ import sys
 import time
 
 
+def time_queries(spark, queries, sf_dir, n_runs):
+    """Time each ``name → Query`` entry ``n_runs`` times with a cold
+    cache; returns ``name → {cold, warm_min, runs}``, or ``name →
+    "FAIL <message>"`` for a query that raised."""
+    results = {}
+    for name, q in queries.items():
+        runs = []
+        try:
+            for _ in range(n_runs):
+                spark.catalog.clearCache()
+                t0 = time.monotonic()
+                q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+                runs.append(round(time.monotonic() - t0, 2))
+        except Exception as ex:  # noqa: BLE001 — record, keep timing
+            results[name] = f"FAIL {str(ex)[:150]}"
+        else:
+            results[name] = {
+                "cold": runs[0],
+                "warm_min": min(runs[1:]) if len(runs) > 1 else None,
+                "runs": runs,
+            }
+        print(name, results[name], flush=True)
+    return results
+
+
 def main() -> None:
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     sys.path.insert(0, repo)
 
-    sf_dir = sys.argv[1]
-    names = sys.argv[2].split(",")
+    sf_dir, selection = sys.argv[1], sys.argv[2]
     n_runs = int(sys.argv[3]) if len(sys.argv) > 3 else 3
-    # NOOP=1: drain through the noop sink instead of count() — count
-    # lets the optimizer prune columns/subtrees (guide §1.4), so noop
-    # is the honest operator cost; kept opt-in so historical count-
-    # based probe numbers stay comparable
-    use_noop = os.environ.get("NOOP", "") == "1"
 
+    from mindseye_dataframes_spark.queries import load_all
     from mindseye_dataframes_spark.session import get_session
 
     spark = get_session(app_name="time-probe")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from mindseye_dataframes_spark.queries import load_all
-
     registry = load_all()
-    out = {"sf_dir": sf_dir, "n_runs": n_runs, "results": {}}
-    for name in names:
-        q = registry[name]
-        runs = []
-        for i in range(n_runs):
-            spark.catalog.clearCache()
-            t0 = time.monotonic()
-            df = q.fn(spark, sf_dir)
-            if use_noop:
-                df.write.format("noop").mode("overwrite").save()
-            else:
-                df.count()
-            runs.append(round(time.monotonic() - t0, 2))
-        out["results"][name] = {
-            "cold": runs[0],
-            "warm_min": min(runs[1:]) if len(runs) > 1 else None,
-            "runs": runs,
-        }
-        print(name, out["results"][name], flush=True)
+    names = sorted(registry) if selection == "all" else selection.split(",")
+    results = time_queries(
+        spark, {n: registry[n] for n in names}, sf_dir, n_runs
+    )
+    out = {
+        "sf_dir": sf_dir,
+        "n_runs": n_runs,
+        "results": results,
+        "fails": [n for n, r in results.items() if isinstance(r, str)],
+    }
     sfname = os.path.basename(os.path.normpath(sf_dir))
-    out["noop"] = use_noop
+    first = "all" if selection == "all" else names[0]
     tag = os.environ.get("PROBE_TAG", "")
     log = os.path.join(
-        repo, "docs", "probes",
-        f"time_{sfname}_{names[0]}_{len(names)}q{tag}.json",
+        repo, "docs", "probes", f"time_{sfname}_{first}_{len(names)}q{tag}.json"
     )
     with open(log, "w") as f:
         json.dump(out, f, indent=1, sort_keys=True)
-    print("LOG", log)
+    print("LOG", log, "FAILS", out["fails"])
 
 
 if __name__ == "__main__":
