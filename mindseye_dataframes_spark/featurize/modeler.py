@@ -48,7 +48,6 @@ from mindseye_dataframes_spark.featurize.strategy import (
     ModelingStrategy,
     PathBucketedOverlay,
 )
-from mindseye_dataframes_spark.functions.exact import dec
 from mindseye_dataframes_spark.functions.hashing import seeded_unit_rms_tensor  # noqa: F401 (re-exported for strategies)
 
 LOSS_KEY = "__loss__"
@@ -285,15 +284,28 @@ class DataframeModeler:
                     if ch.dtype == "timestamp"
                     else F.col(ch.col)
                 )
+                # NaN counts as missing, as in _featurize (z = 0)
+                src = F.nanvl(src, F.lit(None))
+                # The moments are exact decimal sums (functions/exact.py).
+                # try_cast turns a value that does not fit decimal(14,4)
+                # into NULL under either ANSI setting; the count
+                # difference reports it.
+                s18 = src.try_cast("decimal(18,4)")
+                s14 = src.try_cast("decimal(14,4)")
                 aggs += [
                     F.count(src).alias(f"n__{ch.path}"),
-                    F.sum(dec(src, 4, 18)).cast("double").alias(f"s__{ch.path}"),
-                    F.sum(dec(src, 4, 14) * dec(src, 4, 14))
-                    .cast("double")
-                    .alias(f"q__{ch.path}"),
+                    (F.count(src) - F.count(s14)).alias(f"o__{ch.path}"),
+                    F.sum(s18).cast("double").alias(f"s__{ch.path}"),
+                    F.sum(s14 * s14).cast("double").alias(f"q__{ch.path}"),
                 ]
             row = df.agg(*aggs).collect()[0]
             for ch in nums:
+                if row[f"o__{ch.path}"]:
+                    raise ValueError(
+                        f"numeric column {ch.col!r} has {row[f'o__{ch.path}']} "
+                        "value(s) outside the exact-moment range: finite, "
+                        "|x| < 1e10 at 4 decimals"
+                    )
                 n = float(row[f"n__{ch.path}"] or 0)
                 s = float(row[f"s__{ch.path}"] or 0.0)
                 q = float(row[f"q__{ch.path}"] or 0.0)

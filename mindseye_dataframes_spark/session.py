@@ -16,6 +16,15 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
 ARROW_MAX_RECORDS_PER_BATCH = 10_000
+# Generated classes Spark keeps compiled per JVM (Spark's default is
+# 100). One headline pass touches ~150 classes, so with the default
+# every pass evicted them all and re-ran Janino and the JIT on each
+# (~150 compiles per warm pass). Measured working sets (4 cores): a
+# headline pass 150 (176 with the cold pass's one-off classes), the
+# largest single query 66 (q162), bench.py's headline+extended phases
+# 507 at sf0.1, the whole 236-query registry 3,236 at sf0.001. A cached
+# class keeps ~75 KB of heap after GC, so 1,024 costs at most ~75 MB.
+CODEGEN_CACHE_MAX_ENTRIES = 1024
 
 
 def get_session(
@@ -58,6 +67,17 @@ def get_session(
         # scans: bound per-task input so huge files split into sane tasks
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+        # --- generated-class cache: compile each class once per JVM ---
+        # (static conf: it only takes effect when this call starts the JVM)
+        .config(
+            "spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_MAX_ENTRIES)
+        )
+        # The cache is keyed by the class source. AQE numbers codegen
+        # stages in the order its query stages finish, which varies run
+        # to run, so with the stage id in the class name the same
+        # pipeline recompiled under a new name (e.g. q32's 4 classes on
+        # some warm passes). The id stays in the plan and in a comment.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -401,3 +401,40 @@ def test_bucketed_overlay_respects_base_path_size():
         assert overlay.initial_representation(key).shape == (32,), key
     # non-bucketed paths keep base behavior end to end
     assert overlay.initial_representation("other=x").shape == (10,)
+
+
+@pytest.fixture(params=["true", "false"], ids=["ansi_on", "ansi_off"])
+def ansi(spark, request):
+    """Run the test under both ``spark.sql.ansi.enabled`` settings."""
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", request.param)
+    yield request.param
+    spark.conf.set("spark.sql.ansi.enabled", before)
+
+
+def _numeric_stats(spark, values):
+    df = spark.createDataFrame([(v,) for v in values], "x double")
+    modeler = DataframeModeler(ModelingStrategy(default_size=4))
+    modeler.init_keys(df)
+    return modeler.context.stats["x"]
+
+
+def test_init_keys_moments_treat_nan_as_null(spark, ansi):
+    """``_featurize`` maps NaN to z = 0 like NULL, so the moments must
+    skip it like NULL: before, the count kept the NaN while the decimal
+    sums dropped it ((4.0, 1.5, 1.118) instead of (3.0, 2.0, 0.816))."""
+    nan = _numeric_stats(spark, [1.0, 2.0, 3.0, float("nan")])
+    null = _numeric_stats(spark, [1.0, 2.0, 3.0, None])
+    assert nan == null
+    assert null[:2] == (3.0, 2.0) and abs(null[2] - np.sqrt(2 / 3)) < 1e-12
+    # the largest 4-decimal value below the range bound still counts
+    assert _numeric_stats(spark, [9_999_999_999.9999, 0.0])[1] == 4_999_999_999.99995
+
+
+@pytest.mark.parametrize("big", [1e10, -1e12, 1e15, float("inf"), float("-inf")])
+def test_init_keys_rejects_values_outside_exact_moment_range(spark, ansi, big):
+    """A value the decimal(14,4) moments cannot hold raises a named
+    ValueError in both ANSI modes; before, ANSI on raised
+    NUMERIC_VALUE_OUT_OF_RANGE and ANSI off dropped it from the sums."""
+    with pytest.raises(ValueError, match=r"column 'x' has 1 value\(s\) outside the exact-moment range"):
+        _numeric_stats(spark, [1.0, 2.0, 3.0, big])

@@ -53,3 +53,5 @@ def test_time_queries_records_failure_and_times_the_rest(spark):
     ok = results["q_ok"]
     assert len(ok["runs"]) == 2
     assert ok["cold"] == ok["runs"][0] and ok["warm_min"] == ok["runs"][1]
+    # the second run finds its one generated class in the codegen cache
+    assert len(ok["codegen_compiles"]) == 2 and ok["codegen_compiles"][1] == 0

@@ -28,17 +28,23 @@ import time
 
 def time_queries(spark, queries, sf_dir, n_runs):
     """Time each ``name → Query`` entry ``n_runs`` times with a cold
-    cache; returns ``name → {cold, warm_min, runs}``, or ``name →
-    "FAIL <message>"`` for a query that raised."""
+    cache; returns ``name → {cold, warm_min, runs, codegen_compiles}``
+    (the classes each run Janino-compiled; ``None`` under Connect), or
+    ``name → "FAIL <message>"`` for a query that raised."""
+    from mindseye_dataframes_spark.compat import codegen_compile_count
+
     results = {}
     for name, q in queries.items():
-        runs = []
+        runs, compiles = [], []
         try:
             for _ in range(n_runs):
                 spark.catalog.clearCache()
+                c0 = codegen_compile_count(spark)
                 t0 = time.monotonic()
                 q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 runs.append(round(time.monotonic() - t0, 2))
+                c1 = codegen_compile_count(spark)
+                compiles.append(None if c0 is None else c1 - c0)
         except Exception as ex:  # noqa: BLE001 — record, keep timing
             results[name] = f"FAIL {str(ex)[:150]}"
         else:
@@ -46,6 +52,7 @@ def time_queries(spark, queries, sf_dir, n_runs):
                 "cold": runs[0],
                 "warm_min": min(runs[1:]) if len(runs) > 1 else None,
                 "runs": runs,
+                "codegen_compiles": compiles,
             }
         print(name, results[name], flush=True)
     return results
