@@ -8,11 +8,15 @@ Rebuild of the reference's core (`DataframeModeler.scala`,
   int/string columns are categorical (F1), doubles are numeric (F2),
   struct children reduce by element-wise sum (F3,
   `ModelingStrategy.scala:84-89`).
-- **Key discovery** (`initKeys`, `DataframeModeler.scala:163-178`) is
-  TWO aggregate queries — one distinct-keys union (A2), one moments
-  aggregation (A1) — run ONCE and cached in the ModelContext, fixing
-  the reference's per-eval rescan (SURVEY §4.3a). Moments accumulate
-  in exact decimal so the derived parameters are bit-reproducible.
+- **Key discovery** (`initKeys`, `DataframeModeler.scala:163-178`)
+  runs ONCE and is cached in the ModelContext, fixing the reference's
+  per-eval rescan (SURVEY §4.3a). It is ONE aggregate query (A1): the
+  numeric moments, the vector dimensions and the count of label values
+  the strategy cannot encode. Moments accumulate in exact decimal, one
+  cast per value, so the derived parameters are bit-reproducible.
+  Keys a strategy can enumerate (one-hot labels, hashed buckets) need
+  no scan; only the other categorical paths add a distinct-keys
+  query (A2).
 - **Batch inference** ``eval_to_dataframe`` (M1,
   `ModelingStrategy.scala:167-186`): broadcast params → Arrow-batched
   ``mapInPandas`` forward → ``name: array<double>`` column.
@@ -45,6 +49,7 @@ from mindseye_dataframes_spark.compat import broadcast_value
 from mindseye_dataframes_spark.featurize.context import ModelContext
 from mindseye_dataframes_spark.featurize.layers import Network
 from mindseye_dataframes_spark.featurize.strategy import (
+    INT_DTYPES,
     ModelingStrategy,
     PathBucketedOverlay,
 )
@@ -61,9 +66,6 @@ class Channel:
     dtype: str = "string"  # spark simpleString of the source column
 
 
-_INT_DTYPES = {"int", "bigint", "smallint", "tinyint"}
-
-
 def _render_values(col: pd.Series, dtype: str) -> list:
     """Render a pandas column the way Spark's CAST(x AS STRING) does,
     so executor-side parameter keys match driver-discovered keys:
@@ -77,7 +79,7 @@ def _render_values(col: pd.Series, dtype: str) -> list:
             out.append(None)
         elif dtype == "boolean":
             out.append("true" if v else "false")
-        elif dtype in _INT_DTYPES:
+        elif dtype in INT_DTYPES:
             out.append(str(int(v)))
         else:
             out.append(str(v))
@@ -179,96 +181,76 @@ class DataframeModeler:
             # other types are not featurized (documented type matrix)
         return out
 
-    # -- key discovery: two aggregate queries, cached (F1/F2/A1/A2) ----
+    # -- key discovery: one aggregate query, cached (F1/F2/A1/A2) -----
     def init_keys(self, df: DataFrame, label_col: str | None = None) -> None:
         chans = self.channels(df.schema)
-        cats = [ch for ch in chans if ch.kind == "categorical"]
         nums = [ch for ch in chans if ch.kind == "numeric"]
         vecs = [ch for ch in chans if ch.kind == "vector"]
 
-        discovered_keys: list[str] = []
-        discover = []
-        for ch in cats:
+        keys: list[str] = []
+        discover: list[Channel] = []
+        checks: list[tuple[Channel, str]] = []
+        aggs = []
+        for ch in chans:
+            if ch.kind != "categorical":
+                continue
             enumerated = self.strategy.enumerate_keys(ch.path)
-            if enumerated is not None:
-                # bounded dictionaries (e.g. hashed buckets) enumerate
-                # their keys a priori — no data scan, no driver collect
-                discovered_keys.extend(enumerated)
-            else:
+            if enumerated is None:
                 discover.append(ch)
-        if discover:
-            # ONE scan for every discovered channel: explode each row
-            # into its (path, value) pairs and distinct once. The
-            # previous per-channel distinct-then-union shape scanned
-            # the input once PER categorical channel — at 100 TB that
-            # is C full passes for C dictionary columns; this is one.
-            # The distinct's map-side partial aggregation still dedupes
-            # before the (path, value) exchange, so shuffle volume is
-            # unchanged. Same key set: explode(C pairs)+filter+distinct
-            # ≡ union of per-channel filtered distincts.
-            pair_structs = [
-                F.struct(
-                    F.lit(ch.path).alias("path"),
-                    F.col(ch.col).cast("string").alias("value"),
-                )
-                for ch in discover
+                continue
+            # keys known a priori (hashed buckets, one-hot labels): no
+            # data scan, no driver collect; only the values the strategy
+            # cannot encode are counted, in the aggregate below
+            keys.extend(enumerated)
+            check = self.strategy.unencodable(ch.path, ch.dtype, F.col(ch.col))
+            if check is not None:
+                flag, requirement = check
+                aggs.append(F.count(F.when(flag, 1)).alias(f"u__{ch.path}"))
+                checks.append((ch, requirement))
+        for ch in nums:
+            src = F.col(ch.col).cast("double") if ch.dtype == "timestamp" else F.col(ch.col)
+            # NaN counts as missing, as in _featurize (z = 0)
+            src = F.nanvl(src, F.lit(None))
+            # The moments are exact decimal sums (functions/exact.py) over
+            # ONE double → decimal cast per value. try_cast turns a value
+            # that does not fit decimal(14,4) into NULL under either ANSI
+            # setting; the count difference reports it. Σx widens that
+            # same decimal to (18,4), keeping the decimal(28,4) sum
+            # buffer: a cast rounds the double to 4 decimals whatever the
+            # precision, so for every input that does not raise, Σx is
+            # the one a direct decimal(18,4) cast gives.
+            x = src.try_cast("decimal(14,4)")
+            aggs += [
+                F.count(src).alias(f"n__{ch.path}"),
+                (F.count(src) - F.count(x)).alias(f"o__{ch.path}"),
+                F.sum(x.cast("decimal(18,4)")).cast("double").alias(f"s__{ch.path}"),
+                F.sum(x * x).cast("double").alias(f"q__{ch.path}"),
             ]
-            keys = (
-                df.select(F.explode(F.array(*pair_structs)).alias("pv"))
-                .select(F.col("pv.path").alias("path"), F.col("pv.value").alias("value"))
-                .filter(F.col("value").isNotNull())
-                .distinct()
-            )
-            # the cardinality probe and the value collect below are
-            # two jobs over the same union-of-distincts aggregation —
-            # pin it so the dominant shuffle of key discovery runs once
-            # (the overflow branch rebinds ``keys`` with a filter on
-            # top, so keep the pinned handle for the unpersist)
-            keys = pinned = keys.persist()
-            try:
-                if self.max_dictionary_keys is not None:
-                    # cardinality probe BEFORE any row collect: O(paths)
-                    # rows to the driver, never values. Paths over the cap
-                    # auto-bucket (hashing trick) or error; only the
-                    # survivors' values are ever materialized.
-                    per_path = {
-                        r["path"]: r["c"]
-                        for r in keys.groupBy("path")
-                        .agg(F.count(F.lit(1)).alias("c"))
-                        .collect()
-                    }
-                    over = sorted(
-                        p
-                        for p, c in per_path.items()
-                        if c > self.max_dictionary_keys
-                    )
-                    if over:
-                        if self.on_dictionary_overflow == "error":
-                            raise DictionaryOverflowError(
-                                f"distinct-value dictionaries for {over} exceed "
-                                f"max_dictionary_keys={self.max_dictionary_keys} "
-                                f"(counts: {[per_path[p] for p in over]}); use "
-                                "HashedBucketStrategy, raise the cap, or set "
-                                "on_dictionary_overflow='auto_bucket'"
-                            )
-                        self.strategy = PathBucketedOverlay(
-                            self.strategy, over, n_buckets=self.overflow_buckets
-                        )
-                        for p in over:
-                            discovered_keys.extend(self.strategy.enumerate_keys(p))
-                        keys = keys.filter(~F.col("path").isin(*over))
-                discovered_keys.extend(
-                    self.strategy.key_for(path, value)
-                    for path, value in sorted(
-                        (r["path"], r["value"]) for r in keys.collect()
-                    )
+        # the vector dimension: the longest array seen (ragged rows
+        # pad/truncate to it in _featurize)
+        aggs += [F.max(F.size(F.col(ch.col))).alias(f"d__{ch.path}") for ch in vecs]
+
+        # one query for every check, moment and dimension; it raises
+        # before the context is touched
+        row = df.agg(*aggs).collect()[0] if aggs else None
+        for ch, requirement in checks:
+            if row[f"u__{ch.path}"]:
+                raise ValueError(
+                    f"categorical column {ch.col!r} has {row[f'u__{ch.path}']} "
+                    f"value(s) {type(self.strategy).__name__} cannot encode: "
+                    f"each must be {requirement}"
                 )
-            finally:
-                # unpersist on EVERY exit — a DictionaryOverflowError (or
-                # any probe failure) must not leak a cached RDD into a
-                # long-lived session
-                pinned.unpersist()
-        for key in discovered_keys:
+        for ch in nums:
+            if row[f"o__{ch.path}"]:
+                raise ValueError(
+                    f"numeric column {ch.col!r} has {row[f'o__{ch.path}']} "
+                    "value(s) outside the exact-moment range: finite, "
+                    "|x| < 1e10 at 4 decimals"
+                )
+
+        if discover:
+            keys.extend(self._discover_keys(df, discover))
+        for key in keys:
             if key not in self.context.representations:
                 self.context.representations[key] = (
                     self.strategy.initial_representation(key)
@@ -276,66 +258,97 @@ class DataframeModeler:
             if self.strategy.is_frozen(key):
                 self.context.frozen.add(key)
 
-        if nums:
-            aggs = []
-            for ch in nums:
-                src = (
-                    F.col(ch.col).cast("double")
-                    if ch.dtype == "timestamp"
-                    else F.col(ch.col)
-                )
-                # NaN counts as missing, as in _featurize (z = 0)
-                src = F.nanvl(src, F.lit(None))
-                # The moments are exact decimal sums (functions/exact.py).
-                # try_cast turns a value that does not fit decimal(14,4)
-                # into NULL under either ANSI setting; the count
-                # difference reports it.
-                s18 = src.try_cast("decimal(18,4)")
-                s14 = src.try_cast("decimal(14,4)")
-                aggs += [
-                    F.count(src).alias(f"n__{ch.path}"),
-                    (F.count(src) - F.count(s14)).alias(f"o__{ch.path}"),
-                    F.sum(s18).cast("double").alias(f"s__{ch.path}"),
-                    F.sum(s14 * s14).cast("double").alias(f"q__{ch.path}"),
-                ]
-            row = df.agg(*aggs).collect()[0]
-            for ch in nums:
-                if row[f"o__{ch.path}"]:
-                    raise ValueError(
-                        f"numeric column {ch.col!r} has {row[f'o__{ch.path}']} "
-                        "value(s) outside the exact-moment range: finite, "
-                        "|x| < 1e10 at 4 decimals"
-                    )
-                n = float(row[f"n__{ch.path}"] or 0)
-                s = float(row[f"s__{ch.path}"] or 0.0)
-                q = float(row[f"q__{ch.path}"] or 0.0)
-                mean = s / n if n else 0.0
-                std = float(np.sqrt(abs(q / n - mean * mean))) if n else 1.0  # F6
-                self.context.stats[ch.path] = (n, mean, std if std > 0 else 1.0)
-                tkey = f"transform/{ch.path}"
-                if tkey not in self.context.transforms:
-                    size = self.strategy.size(ch.path)
-                    p = self.strategy.mapping_power
-                    init = seeded_unit_rms_tensor(tkey, p * size).reshape(p, size)
-                    self.context.transforms[tkey] = init / np.sqrt(p)
+        for ch in nums:
+            n = float(row[f"n__{ch.path}"] or 0)
+            s = float(row[f"s__{ch.path}"] or 0.0)
+            q = float(row[f"q__{ch.path}"] or 0.0)
+            mean = s / n if n else 0.0
+            std = float(np.sqrt(abs(q / n - mean * mean))) if n else 1.0  # F6
+            self.context.stats[ch.path] = (n, mean, std if std > 0 else 1.0)
+            tkey = f"transform/{ch.path}"
+            if tkey not in self.context.transforms:
+                size = self.strategy.size(ch.path)
+                p = self.strategy.mapping_power
+                init = seeded_unit_rms_tensor(tkey, p * size).reshape(p, size)
+                self.context.transforms[tkey] = init / np.sqrt(p)
 
-        if vecs:
-            # dimension probe: one tiny agg, never a row collect
-            dims = df.agg(
-                *[
-                    F.max(F.size(F.col(ch.col))).alias(f"d__{ch.path}")
-                    for ch in vecs
-                ]
-            ).collect()[0]
-            for ch in vecs:
-                d = int(dims[f"d__{ch.path}"] or 0)
-                key = f"vector/{ch.path}"
-                if d and key not in self.context.transforms:
-                    size = self.strategy.size(ch.path)
-                    init = seeded_unit_rms_tensor(key, d * size).reshape(d, size)
-                    # scale so the projected output stays unit-RMS for
-                    # unit-RMS inputs (same convention as transforms)
-                    self.context.transforms[key] = init / np.sqrt(d)
+        for ch in vecs:
+            # size(NULL) is -1 with ANSI off: an all-NULL column has no
+            # dimension either way
+            d = max(int(row[f"d__{ch.path}"] or 0), 0)
+            key = f"vector/{ch.path}"
+            if d and key not in self.context.transforms:
+                size = self.strategy.size(ch.path)
+                init = seeded_unit_rms_tensor(key, d * size).reshape(d, size)
+                # scale so the projected output stays unit-RMS for
+                # unit-RMS inputs (same convention as transforms)
+                self.context.transforms[key] = init / np.sqrt(d)
+
+    def _discover_keys(self, df: DataFrame, chans: list[Channel]) -> list[str]:
+        """The parameter keys of the categorical channels whose keys the
+        strategy cannot enumerate: their distinct values, from ONE scan.
+        A path whose dictionary exceeds ``max_dictionary_keys`` switches
+        to hashed buckets or raises, per ``on_dictionary_overflow``."""
+        # explode each row into its (path, value) pairs and distinct
+        # once: one pass over the input for C dictionary columns, not C.
+        # The distinct's map-side partial aggregation still dedupes
+        # before the (path, value) exchange, so shuffle volume matches
+        # per-channel distincts, and so does the key set.
+        pair_structs = [
+            F.struct(
+                F.lit(ch.path).alias("path"),
+                F.col(ch.col).cast("string").alias("value"),
+            )
+            for ch in chans
+        ]
+        keys = (
+            df.select(F.explode(F.array(*pair_structs)).alias("pv"))
+            .select(F.col("pv.path").alias("path"), F.col("pv.value").alias("value"))
+            .filter(F.col("value").isNotNull())
+            .distinct()
+        )
+        # the cardinality probe and the value collect below are two jobs
+        # over the same distinct — pin it so its shuffle runs once (the
+        # overflow branch rebinds ``keys`` with a filter on top, so keep
+        # the pinned handle for the unpersist)
+        keys = pinned = keys.persist()
+        out: list[str] = []
+        try:
+            if self.max_dictionary_keys is not None:
+                # cardinality probe BEFORE any row collect: O(paths) rows
+                # to the driver, never values. Paths over the cap
+                # auto-bucket (hashing trick) or error; only the
+                # survivors' values are ever materialized.
+                per_path = {
+                    r["path"]: r["c"]
+                    for r in keys.groupBy("path").agg(F.count(F.lit(1)).alias("c")).collect()
+                }
+                over = sorted(p for p, c in per_path.items() if c > self.max_dictionary_keys)
+                if over:
+                    if self.on_dictionary_overflow == "error":
+                        raise DictionaryOverflowError(
+                            f"distinct-value dictionaries for {over} exceed "
+                            f"max_dictionary_keys={self.max_dictionary_keys} "
+                            f"(counts: {[per_path[p] for p in over]}); use "
+                            "HashedBucketStrategy, raise the cap, or set "
+                            "on_dictionary_overflow='auto_bucket'"
+                        )
+                    self.strategy = PathBucketedOverlay(
+                        self.strategy, over, n_buckets=self.overflow_buckets
+                    )
+                    for p in over:
+                        out.extend(self.strategy.enumerate_keys(p))
+                    keys = keys.filter(~F.col("path").isin(*over))
+            out.extend(
+                self.strategy.key_for(path, value)
+                for path, value in sorted((r["path"], r["value"]) for r in keys.collect())
+            )
+        finally:
+            # unpersist on EVERY exit — a DictionaryOverflowError (or any
+            # probe failure) must not leak a cached RDD into a long-lived
+            # session
+            pinned.unpersist()
+        return out
 
     # -- featurization (executed inside mapInPandas) -------------------
     @staticmethod

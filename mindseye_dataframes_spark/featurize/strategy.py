@@ -8,11 +8,15 @@ embeddings."""
 from __future__ import annotations
 
 import numpy as np
+from pyspark.sql import Column
 
 from mindseye_dataframes_spark.functions.hashing import (
     hmac_sha1_seed,
     seeded_unit_rms_tensor,
 )
+
+# Spark simpleStrings of the integer column types
+INT_DTYPES = frozenset({"int", "bigint", "smallint", "tinyint"})
 
 
 class ModelingStrategy:
@@ -34,6 +38,15 @@ class ModelingStrategy:
         when keys must be discovered from the data. Bounded-dictionary
         strategies return their full key set so ``init_keys`` needs no
         distinct-value scan or driver collect for that path."""
+        return None
+
+    def unencodable(self, path: str, dtype: str, value: Column) -> tuple[Column, str] | None:
+        """For an enumerated path, ``(flag, requirement)``: ``flag`` is a
+        Spark boolean over the column ``value`` (of simpleString
+        ``dtype``) that is true for a value ``initial_representation``
+        cannot encode, and ``requirement`` says what a value must be.
+        ``init_keys`` counts the flagged values in its one aggregate and
+        raises naming the column. None when every value is encodable."""
         return None
 
     def initial_representation(self, key: str) -> np.ndarray:
@@ -101,6 +114,11 @@ class PathBucketedOverlay(ModelingStrategy):
             return self._hashed.enumerate_keys(path)
         return self.base.enumerate_keys(path)
 
+    def unencodable(self, path: str, dtype: str, value: Column) -> tuple[Column, str] | None:
+        if path in self.bucketed_paths:
+            return None
+        return self.base.unencodable(path, dtype, value)
+
     def initial_representation(self, key: str) -> np.ndarray:
         # bucketed keys are 'p#bucket=b': size them by the ORIGINAL
         # path p through the base (a base with per-path size overrides
@@ -124,7 +142,13 @@ class CategorizingStrategy(ModelingStrategy):
     """One-hot target encoding: for keys ``<label_path>=k`` emit a
     frozen tensor of length ``categories`` with 1.0 at index k-1
     (`CategorizingModelingStrategy.scala:27-50`; labels are 1-based in
-    the covtype dataset — configurable here via ``base``)."""
+    the covtype dataset — configurable here via ``base``).
+
+    The label's keys are known before any scan, so ``enumerate_keys``
+    lists them and ``init_keys`` runs no distinct-value discovery for
+    the label. An integer label outside ``base … base+categories-1``
+    has no key in the context; its vector is all zeros, which is what
+    ``initial_representation`` builds when ``eval`` looks it up."""
 
     def __init__(
         self,
@@ -147,6 +171,27 @@ class CategorizingStrategy(ModelingStrategy):
         if path.endswith(self.category_column):
             return self.categories
         return self.default_size
+
+    def enumerate_keys(self, path: str) -> list[str] | None:
+        if not path.endswith(self.category_column):
+            return None
+        if self.value_index is not None:
+            values = list(self.value_index)
+        else:
+            values = [str(self.base + i) for i in range(self.categories)]
+        return [self.key_for(path, v) for v in values]
+
+    def unencodable(self, path: str, dtype: str, value: Column) -> tuple[Column, str] | None:
+        if not path.endswith(self.category_column):
+            return None
+        text = value.cast("string")
+        if self.value_index is not None:
+            return ~text.isin(list(self.value_index)), "a key of value_index"
+        if dtype in INT_DTYPES:
+            return None
+        # the values int() parses: optional sign, ASCII digits, outer
+        # whitespace
+        return ~text.rlike(r"^\s*[+-]?[0-9]+\s*$"), "an integer (or pass a value_index)"
 
     def initial_representation(self, key: str) -> np.ndarray:
         if not self._is_category_key(key):

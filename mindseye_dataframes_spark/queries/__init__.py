@@ -69,7 +69,14 @@ _ordered: dict[str, Query] = {}
 # row: that row proves superseded code, so they re-prove at the head
 # of the window. Drop a query from it once a CORRECTNESS file shows
 # it green again.
-REFRESH: set[str] = set()
+REFRESH: set[str] = {
+    # DataframeModeler.init_keys became one aggregate with one decimal
+    # cast per value
+    "q40_featurize_pipeline",
+    "q65_featurize_temporal_embedding",
+    "q78_eval_identity",
+    "q235_eval_preview_zip",
+}
 
 # The driver writes one CORRECTNESS_rNN.json per round next to
 # __spark_entry__.py, at the repository root.

@@ -148,7 +148,15 @@ def q39_param_identity(spark, sf_dir):
 def _moments_sql(col: str, table: str = "lineitem") -> str:
     """Exact-decimal moments CTE body — the engine-identical double
     derivation ``init_keys`` performs (sum DECIMAL(18,4), sum of
-    DECIMAL(14,4) squares, single cast→divide→sqrt IEEE sequence)."""
+    DECIMAL(14,4) squares, single cast→divide→sqrt IEEE sequence).
+
+    ``init_keys`` casts each double once, to DECIMAL(14,4), and sums
+    that value widened to DECIMAL(18,4). The direct DECIMAL(18,4) cast
+    here gives the same sum: a cast rounds the double to 4 decimals
+    whatever the precision, and ``init_keys`` raises for any value the
+    DECIMAL(14,4) cast cannot hold, so on every input it accepts the
+    two casts agree value by value. The SQL keeps the direct cast: it
+    is the independent reference the oracle checks compare against."""
     return f"""
       SELECT
         CAST(SUM(CAST({col} AS DECIMAL(18,4))) AS DOUBLE)

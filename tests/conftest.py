@@ -22,3 +22,12 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(params=["true", "false"], ids=["ansi_on", "ansi_off"])
+def ansi(spark, request):
+    """Run the test under both ``spark.sql.ansi.enabled`` settings."""
+    before = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", request.param)
+    yield request.param
+    spark.conf.set("spark.sql.ansi.enabled", before)

@@ -3,6 +3,8 @@ numpy on tiny frames; training smoke = loss strictly decreases)."""
 
 from __future__ import annotations
 
+import itertools
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -403,15 +405,6 @@ def test_bucketed_overlay_respects_base_path_size():
     assert overlay.initial_representation("other=x").shape == (10,)
 
 
-@pytest.fixture(params=["true", "false"], ids=["ansi_on", "ansi_off"])
-def ansi(spark, request):
-    """Run the test under both ``spark.sql.ansi.enabled`` settings."""
-    before = spark.conf.get("spark.sql.ansi.enabled")
-    spark.conf.set("spark.sql.ansi.enabled", request.param)
-    yield request.param
-    spark.conf.set("spark.sql.ansi.enabled", before)
-
-
 def _numeric_stats(spark, values):
     df = spark.createDataFrame([(v,) for v in values], "x double")
     modeler = DataframeModeler(ModelingStrategy(default_size=4))
@@ -438,3 +431,170 @@ def test_init_keys_rejects_values_outside_exact_moment_range(spark, ansi, big):
     NUMERIC_VALUE_OUT_OF_RANGE and ANSI off dropped it from the sums."""
     with pytest.raises(ValueError, match=r"column 'x' has 1 value\(s\) outside the exact-moment range"):
         _numeric_stats(spark, [1.0, 2.0, 3.0, big])
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def _job_count(spark, action) -> int:
+    """The Spark jobs ``action()`` runs, counted by a fresh job group."""
+    group = f"job-count-{next(_JOB_GROUPS)}"
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_init_keys_runs_one_aggregate_query(spark, ansi):
+    """The moments, the vector dimension and the one-hot label need the
+    jobs of one bare aggregate: the label's keys are enumerated, not
+    discovered, and the dimension probe rides in the moments query."""
+    df = spark.range(200).select(
+        (F.col("id") / 7).alias("x"),
+        F.array(F.col("id").cast("double"), F.lit(1.0)).alias("emb"),
+        (F.col("id") % 3 + 1).cast("int").alias("label"),
+    )
+    bare = _job_count(spark, lambda: df.agg(F.count("*")).collect())
+    modeler = DataframeModeler(CategorizingStrategy("label", categories=3, base=1, default_size=4))
+    jobs = _job_count(spark, lambda: modeler.init_keys(df, "label"))
+    assert jobs == bare > 0
+    ctx = modeler.context
+    assert set(ctx.representations) == ctx.frozen == {"label=1", "label=2", "label=3"}
+    assert ctx.stats["x"][0] == 200.0
+    assert ctx.transforms["vector/emb"].shape == (2, 4)
+
+
+def _two_cast_stats(df) -> dict:
+    """The moments as computed before one cast served both sums: Σx over
+    its own decimal(18,4) cast, Σx² over decimal(14,4)."""
+    aggs = []
+    for c in df.columns:
+        src = F.nanvl(F.col(c), F.lit(None))
+        s14 = src.try_cast("decimal(14,4)")
+        aggs += [
+            F.count(src).alias(f"n_{c}"),
+            F.sum(src.try_cast("decimal(18,4)")).cast("double").alias(f"s_{c}"),
+            F.sum(s14 * s14).cast("double").alias(f"q_{c}"),
+        ]
+    row = df.agg(*aggs).collect()[0]
+    out = {}
+    for c in df.columns:
+        n = float(row[f"n_{c}"] or 0)
+        s = float(row[f"s_{c}"] or 0.0)
+        q = float(row[f"q_{c}"] or 0.0)
+        mean = s / n if n else 0.0
+        std = float(np.sqrt(abs(q / n - mean * mean))) if n else 1.0
+        out[c] = (n, mean, std if std > 0 else 1.0)
+    return out
+
+
+def test_one_cast_moments_match_two_cast_reference(spark, ansi):
+    """Σx over the decimal(14,4) value widened to (18,4) is the Σx of a
+    direct decimal(18,4) cast, bit for bit, on values that stress the
+    4-decimal rounding, the sign and the range bound."""
+    big = 9_999_999_999.9999
+    i = F.col("id")
+    df = spark.range(3000).select(
+        (i / 7).alias("sevenths"),
+        (i * 0.00005).alias("ties"),
+        (-(i / 3) - i * 0.00015).alias("negatives"),
+        F.when(i % 3 == 0, -big).otherwise(big).alias("bound"),
+        F.when(i % 5 == 0, F.lit(None))
+        .when(i % 5 == 1, F.lit(float("nan")))
+        .otherwise(i / 3)
+        .alias("null_nan"),
+        F.lit(None).cast("double").alias("all_null"),
+    )
+    modeler = DataframeModeler(ModelingStrategy(default_size=4))
+    modeler.init_keys(df)
+    want = _two_cast_stats(df)
+    assert modeler.context.stats == want
+    assert want["all_null"] == (0.0, 0.0, 1.0) and want["null_nan"][0] == 1800.0
+
+
+def test_value_index_label_enumerates_exactly_its_keys(spark):
+    """With a value_index the label's keys are the index's, all frozen,
+    whether or not the data holds each value."""
+    df = spark.createDataFrame([(1.0, "X"), (2.0, "Y"), (3.0, None)], "x double, label string")
+    vi = {"X": 0, "Y": 1, "Z": 2}
+    modeler = DataframeModeler(CategorizingStrategy("label", categories=3, value_index=vi, default_size=4))
+    modeler.init_keys(df, "label")
+    ctx = modeler.context
+    assert set(ctx.representations) == ctx.frozen == {"label=X", "label=Y", "label=Z"}
+    assert np.array_equal(ctx.representations["label=Z"], [0.0, 0.0, 1.0])
+
+
+def test_out_of_range_int_label_evaluates_as_its_zero_vector(spark):
+    """A label outside base … base+categories-1 has no key in the
+    context; eval's fallback gives it the all-zero vector, so loss and
+    gradients equal those with that zero vector stored by hand (what
+    key discovery stored before the keys were enumerated)."""
+    rows = [(float(i), lbl) for i, lbl in enumerate([1, 2, 0, 3, 8, 2, 0, 1])]
+    df = spark.createDataFrame(rows, "x double, label int").repartition(2)
+    modeler = DataframeModeler(CategorizingStrategy("label", categories=3, base=1, default_size=4))
+    modeler.init_keys(df, "label")
+    ctx = modeler.context
+    assert "label=0" not in ctx.representations and "label=8" not in ctx.representations
+    net = mlp("m", 4, [5], 3)
+    ctx.layers.update(net.init_params())
+    loss, grads = modeler.eval(df, net, "label")
+
+    for key in ("label=0", "label=8"):
+        ctx.representations[key] = np.zeros(3)
+        ctx.frozen.add(key)
+    loss_stored, grads_stored = modeler.eval(df, net, "label")
+    assert loss == loss_stored
+    assert grads.keys() == grads_stored.keys()
+    for key, g in grads.items():
+        assert np.array_equal(g, grads_stored[key]), key
+
+
+@pytest.mark.parametrize(
+    "dtype, values, value_index, message",
+    [
+        ("string", ["1", "2", "two", None, "x"], None, r"'label' has 2 value\(s\).*an integer"),
+        ("boolean", [True, False, None], None, r"'label' has 2 value\(s\).*an integer"),
+        ("string", ["X", "Y", "Q", None], {"X": 0, "Y": 1}, r"'label' has 1 value\(s\).*value_index"),
+    ],
+    ids=["non_integer_string", "boolean", "outside_value_index"],
+)
+def test_unencodable_label_raises_from_the_aggregate(spark, ansi, dtype, values, value_index, message):
+    """A label value the one-hot strategy cannot encode raises a
+    ValueError naming the column, counted inside the moments aggregate
+    (no job of its own) and before the context is touched."""
+    df = spark.createDataFrame([(float(i), v) for i, v in enumerate(values)], f"x double, label {dtype}")
+    bare = _job_count(spark, lambda: df.agg(F.count("*")).collect())
+    strategy = CategorizingStrategy("label", categories=2, value_index=value_index, default_size=4)
+    modeler = DataframeModeler(strategy)
+
+    def init():
+        with pytest.raises(ValueError, match=message):
+            modeler.init_keys(df, "label")
+
+    assert _job_count(spark, init) == bare
+    assert not modeler.context.representations and not modeler.context.stats
+
+
+def test_bucketed_overlay_keeps_the_label_check(spark):
+    """An auto-bucketing overlay delegates the label check to its base
+    for every path it does not bucket."""
+    from mindseye_dataframes_spark.featurize.strategy import PathBucketedOverlay
+
+    base = CategorizingStrategy("label", categories=2, default_size=4)
+    modeler = DataframeModeler(PathBucketedOverlay(base, ["user"], n_buckets=4))
+    df = spark.createDataFrame([("u1", "two"), ("u2", "1")], "user string, label string")
+    with pytest.raises(ValueError, match=r"'label' has 1 value\(s\)"):
+        modeler.init_keys(df, "label")
+
+
+def test_all_null_vector_column_has_no_dimension(spark, ansi):
+    """size(NULL) is -1 with ANSI off; an all-NULL vector column still
+    gets no transform rather than a negative dimension."""
+    df = spark.createDataFrame([(1.0, None), (2.0, None)], "x double, emb array<double>")
+    modeler = DataframeModeler(ModelingStrategy(default_size=4))
+    modeler.init_keys(df)
+    assert "vector/emb" not in modeler.context.transforms
+    assert np.allclose(modeler.context.stats["x"], (2.0, 1.5, 0.5))
