@@ -27,4 +27,9 @@ queries/    the declared query surface + duckdb oracle SQL
 
 __version__ = "0.1.0"
 
+from mindseye_dataframes_spark.compat import stamp_zip_reloads
 from mindseye_dataframes_spark.session import get_session  # noqa: F401
+
+# a no-op except in a PySpark worker, which imports the package to
+# unpickle any of its UDFs
+stamp_zip_reloads()

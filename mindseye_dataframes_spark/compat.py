@@ -27,9 +27,16 @@ Fallback semantics, per capability:
   wide enough" degrades to a no-op — correct on any real cluster
   where scans have many splits, and a bounded single-machine
   papercut in the local corner the probe exists for.
+
+One shim acts on the Python worker rather than the session:
+``stamp_zip_reloads()`` (below) stops each UDF task from re-reading
+the directories of the zips on the worker's path on CPython < 3.13.
 """
 
 from __future__ import annotations
+
+import os
+import sys
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -115,3 +122,36 @@ def codegen_compile_count(spark: SparkSession) -> int | None:
         return int(metrics.METRIC_COMPILATION_TIME().getCount())
     except Exception:
         return None
+
+
+def stamp_zip_reloads() -> None:
+    """Inside a PySpark worker on CPython < 3.13, make
+    ``zipimporter.invalidate_caches`` re-read an archive only when its
+    file has changed since this importer last read it.
+
+    Every Python UDF task calls ``importlib.invalidate_caches()``
+    (``pyspark.worker_util.setup_spark_files``). Before 3.13 (gh-103200)
+    each ``zipimporter`` on the path then re-reads its archive's whole
+    central directory. A Spark 4.1 worker has 16: 12 into
+    ``pyspark.zip`` (1,328 entries), 2 into the spark-core jar (5,359)
+    and 2 into py4j's zip, ~27,000 entries and ~0.25 CPU-s per task
+    before the UDF runs. The stamp is ``(st_mtime_ns, st_size, st_ino)``,
+    taken before the read, so a rewrite during the read re-reads again
+    next time. The driver and other processes are left as they are."""
+    if sys.version_info >= (3, 13) or "pyspark.worker" not in sys.modules:
+        return
+    import zipimport
+
+    reread = zipimport.zipimporter.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            stamp = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            stamp = None
+        if stamp is None or stamp != getattr(self, "_archive_stamp", None):
+            reread(self)
+            self._archive_stamp = stamp
+
+    zipimport.zipimporter.invalidate_caches = invalidate_caches

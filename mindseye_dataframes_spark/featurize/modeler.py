@@ -560,8 +560,11 @@ class DataframeModeler:
 
         ``loss_only`` skips the backward pass and gradient shuffle — the
         cheap forward probe the bisection line search runs several times
-        per optimizer step. ``params_override`` evaluates a trial
-        parameter set without mutating the context."""
+        per optimizer step. It is one Spark job: the per-partition loss
+        rows (one per partition) are summed on the driver, in partition
+        order, by the same ``Series.sum`` the merge applies.
+        ``params_override`` evaluates a trial parameter set without
+        mutating the context."""
         chans = self.channels(df.schema)
         label_chan = _label_channel(chans, label_col)
         skip = {label_chan.path}
@@ -642,6 +645,11 @@ class DataframeModeler:
         partials = flat.mapInPandas(
             fwd_bwd, schema="key string, grad array<double>, loss double, n long"
         )
+        if loss_only:
+            loss_rows = partials.select("loss", "n").toPandas()
+            bc.unpersist()
+            n_total = max(int(loss_rows["n"].sum()), 1)
+            return (float(loss_rows["loss"].sum()) / n_total, {})
 
         def merge_group(key, pdf):
             k = key[0]

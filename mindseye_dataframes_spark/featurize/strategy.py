@@ -164,16 +164,23 @@ class CategorizingStrategy(ModelingStrategy):
         self.base = base
         self.value_index = value_index  # for non-integer labels: value -> index
 
+    def _is_category_path(self, path: str) -> bool:
+        """The label column itself, at the top level or nested under a
+        struct (``a/label``); never a column whose name only ends with
+        the label's (``prev_label``)."""
+        col = self.category_column
+        return path == col or path.endswith("/" + col)
+
     def _is_category_key(self, key: str) -> bool:
-        return key.split("=", 1)[0].endswith(self.category_column)
+        return self._is_category_path(key.split("=", 1)[0])
 
     def size(self, path: str) -> int:
-        if path.endswith(self.category_column):
+        if self._is_category_path(path):
             return self.categories
         return self.default_size
 
     def enumerate_keys(self, path: str) -> list[str] | None:
-        if not path.endswith(self.category_column):
+        if not self._is_category_path(path):
             return None
         if self.value_index is not None:
             values = list(self.value_index)
@@ -182,7 +189,7 @@ class CategorizingStrategy(ModelingStrategy):
         return [self.key_for(path, v) for v in values]
 
     def unencodable(self, path: str, dtype: str, value: Column) -> tuple[Column, str] | None:
-        if not path.endswith(self.category_column):
+        if not self._is_category_path(path):
             return None
         text = value.cast("string")
         if self.value_index is not None:

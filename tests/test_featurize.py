@@ -598,3 +598,74 @@ def test_all_null_vector_column_has_no_dimension(spark, ansi):
     modeler.init_keys(df)
     assert "vector/emb" not in modeler.context.transforms
     assert np.allclose(modeler.context.stats["x"], (2.0, 1.5, 0.5))
+
+
+def test_label_name_suffix_is_an_ordinary_categorical(spark):
+    """Only the label column, top-level or nested under a struct
+    (``a/label``), is the one-hot label. A column whose name merely ends
+    with the label's (``prev_label``) is discovered, sized and trained
+    like any categorical."""
+    s = CategorizingStrategy("label", categories=3, base=1, default_size=4)
+    assert s.size("prev_label") == 4 and s.enumerate_keys("prev_label") is None
+    assert not s.is_frozen("prev_label=2")
+    assert s.initial_representation("prev_label=2").shape == (4,)
+    assert s.size("a/label") == 3 and s.is_frozen("a/label=2")
+    assert np.array_equal(s.initial_representation("a/label=2"), [0, 1, 0])
+
+    df = spark.createDataFrame([("x", 1), ("y", 2)], "prev_label string, label int")
+    modeler = DataframeModeler(s)
+    modeler.init_keys(df, "label")  # a string prev_label is no unencodable label
+    ctx = modeler.context
+    assert ctx.frozen == {"label=1", "label=2", "label=3"}
+    assert set(ctx.representations) - ctx.frozen == {"prev_label=x", "prev_label=y"}
+    assert ctx.representations["prev_label=x"].shape == (4,)
+
+    nested = spark.createDataFrame([((1,),), ((3,),)], "a struct<label:int>")
+    modeler = DataframeModeler(s)
+    modeler.init_keys(nested, "a.label")
+    assert set(modeler.context.representations) == modeler.context.frozen == {
+        "a/label=1", "a/label=2", "a/label=3"
+    }
+
+
+def test_loss_only_eval_is_one_job_and_matches_the_merged_loss(spark, monkeypatch):
+    """A line-search probe runs the jobs of one bare collect of its
+    input: its per-partition loss rows are summed on the driver, not
+    shuffled to a grouped merge. The sum is bit for bit the loss the grouped merge of
+    the same rows gives."""
+    import pandas as pd
+
+    rng = np.random.default_rng(3)
+    rows = [(f"c{i % 5}", float(x), f"L{i % 3}") for i, x in enumerate(rng.standard_normal(60))]
+    df = spark.createDataFrame(rows, "cat string, x double, label string").repartition(5)
+    modeler = DataframeModeler(
+        CategorizingStrategy("label", categories=3, value_index={"L0": 0, "L1": 1, "L2": 2}, default_size=4)
+    )
+    modeler.init_keys(df, "label")
+    net = mlp("m", 4, [6], 3)
+    modeler.context.layers.update(net.init_params())
+
+    frame = type(df)
+    partials = []
+    map_in_pandas = frame.mapInPandas
+
+    def spy(self, *args, **kwargs):
+        partials.append(map_in_pandas(self, *args, **kwargs))
+        return partials[-1]
+
+    monkeypatch.setattr(frame, "mapInPandas", spy)
+    bare = _job_count(spark, df.collect)
+    result = []
+    jobs = _job_count(spark, lambda: result.append(modeler.eval(df, net, "label", loss_only=True)))
+    assert jobs == bare > 0
+    loss, grads = result[0]
+    assert grads == {}
+
+    def merge(key, pdf):
+        return pd.DataFrame(
+            [(key[0], float(pdf["loss"].sum()), int(pdf["n"].sum()))], columns=["key", "loss", "n"]
+        )
+
+    (ref,) = partials[0].groupBy("key").applyInPandas(merge, "key string, loss double, n long").collect()
+    assert ref["n"] == len(rows)
+    assert loss == ref["loss"] / ref["n"]

@@ -2,6 +2,10 @@
 
 from __future__ import annotations
 
+import sys
+
+import pytest
+
 from mindseye_dataframes_spark.compat import codegen_compile_count
 from mindseye_dataframes_spark.queries import load_all
 from mindseye_dataframes_spark.session import CODEGEN_CACHE_MAX_ENTRIES
@@ -38,3 +42,67 @@ def test_warm_headline_pass_compiles_nothing(spark, sf_dir):
         if not any(passes[-1].values()):
             break
     assert not any(passes[-1].values()), f"compiles per pass: {passes}"
+
+
+def _zip_cache_probe(batches):
+    """Inside a worker: after the package import, does
+    ``importlib.invalidate_caches()`` keep every cached zip directory,
+    and does it still pick up a member added to a rewritten archive?"""
+    import importlib
+    import os
+    import tempfile
+    import uuid
+    import zipfile
+    import zipimport
+
+    import pandas as pd
+
+    import mindseye_dataframes_spark  # noqa: F401 — installs the stamp
+
+    for _ in batches:
+        pass
+    importlib.invalidate_caches()
+    before = {k: id(v) for k, v in zipimport._zip_directory_cache.items()}
+    importlib.invalidate_caches()
+    kept = bool(before) and all(
+        id(zipimport._zip_directory_cache.get(k)) == v for k, v in before.items()
+    )
+
+    name = f"zipstamp_{uuid.uuid4().hex}"
+    archive = os.path.join(tempfile.mkdtemp(), "probe.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr(f"{name}_a.py", "A = 1\n")
+    sys.path.insert(0, archive)
+    try:
+        importlib.import_module(f"{name}_a")
+        importlib.invalidate_caches()  # stamps the new importer
+        with zipfile.ZipFile(archive, "w") as z:
+            z.writestr(f"{name}_a.py", "A = 1\n")
+            z.writestr(f"{name}_b.py", "B = 2\n")
+        importlib.invalidate_caches()
+        reloaded = importlib.import_module(f"{name}_b").B == 2
+    finally:
+        sys.path.remove(archive)
+        sys.path_importer_cache.pop(archive, None)
+        for mod in (f"{name}_a", f"{name}_b"):
+            sys.modules.pop(mod, None)
+        os.remove(archive)
+        os.rmdir(os.path.dirname(archive))
+    yield pd.DataFrame({"kept": [kept], "reloaded": [reloaded]})
+
+
+@pytest.mark.skipif(
+    sys.version_info >= (3, 13), reason="zipimport reads lazily from 3.13 (gh-103200)"
+)
+def test_worker_keeps_unchanged_zip_directories(spark):
+    """Every Python UDF task calls ``importlib.invalidate_caches()``.
+    Before 3.13 that re-read the central directory of each zip on the
+    path (``pyspark.zip``, the spark-core jar) once per zipimporter,
+    ~0.25 CPU-s per task. With the package
+    imported, a second call keeps every cached directory, yet an archive
+    rewritten in between is re-read. Each of two tasks must see both."""
+    df = spark.range(1, numPartitions=1)
+    for _ in range(2):
+        (row,) = df.mapInPandas(_zip_cache_probe, "kept boolean, reloaded boolean").collect()
+    assert row["kept"], "invalidate_caches re-read an unchanged zip archive"
+    assert row["reloaded"], "a rewritten zip archive was not re-read"
