@@ -38,35 +38,6 @@ def distinct_tokens(text: Column | str) -> Column:
     return F.array_distinct(tokens(text))
 
 
-def shingles(text: Column | str, n: int = 3) -> Column:
-    """Word n-gram shingles; documents shorter than n fall back to the
-    whole text as a single shingle (mirrors the oracle's CASE)."""
-    toks = tokens(text)
-    gram = lambda i: F.concat_ws(
-        " ", *[F.element_at(toks, i + F.lit(j)) for j in range(n)]
-    )
-    return F.when(
-        F.size(toks) >= n,
-        F.array_distinct(
-            F.transform(F.sequence(F.lit(1), F.size(toks) - (n - 1)), gram)
-        ),
-    ).otherwise(F.array(_c(text)))
-
-
-def minhash_signature(items: Column | str, k: int = MINHASH_K) -> Column:
-    """k-element MinHash signature over a set of strings: element i is
-    ``min(md5(i || ':' || item))`` — a salted-hash minimum that any
-    SQL engine reproduces exactly (lexicographic min of hex strings).
-    """
-    its = _c(items)
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(k - 1)),
-        lambda i: F.array_min(
-            F.transform(its, lambda s: F.md5(F.concat(i.cast("string"), F.lit(":"), s)))
-        ),
-    )
-
-
 def lsh_band_keys(sig: Column | str, bands: int = LSH_BANDS, k: int = MINHASH_K) -> Column:
     """Banding for LSH: ``bands`` keys, each ``band_idx:md5(rows)``.
     Docs sharing any band key are candidate duplicates."""
@@ -116,17 +87,22 @@ def simhash16(text: Column | str) -> Column:
 # ---------------------------------------------------------------------------
 # Python twins for Arrow-batched (pandas UDF) execution.
 #
-# The SQL-expression versions above are correct but higher-order
-# functions (transform/aggregate) execute interpreted — no codegen, no
-# common-subexpression elimination — measured ~25ms/doc for MinHash at
-# sf0.1. Shingling + hashing is doc-local work, so the scale path is a
-# pandas UDF: Arrow batches in, tight Python loop (hashlib.md5 is C),
-# zero shuffle. Same tokenization and hash → oracle-identical results.
+# Shingling and MinHash as column expressions need higher-order
+# functions (transform/aggregate), which execute interpreted — no
+# codegen, no common-subexpression elimination — measured ~25ms/doc for
+# MinHash at sf0.1. Shingling + hashing is doc-local work, so it runs
+# as a pandas UDF: Arrow batches in, tight Python loop (hashlib.md5 is
+# C), zero shuffle. Same tokenization and hash as the oracle SQL
+# (``q31_minhash_signatures``) → oracle-identical results.
 # ---------------------------------------------------------------------------
 
 
 def py_shingles(text: str, n: int = 3) -> list[str]:
-    """Python twin of :func:`shingles` (first-seen dedup order)."""
+    """Word n-gram shingles in first-seen dedup order; documents
+    shorter than n fall back to the whole text as a single shingle.
+    Matches the oracle SQL's ``list_distinct(list_transform(range(1,
+    len(toks) - n + 2), ...))`` with its ``ELSE [text]`` branch
+    (``q31_minhash_signatures``)."""
     toks = text.split(" ")
     if len(toks) < n:
         return [text]
@@ -151,7 +127,11 @@ def py_distinct_tokens(text: str) -> list[str]:
 
 
 def py_minhash(items: list[str], k: int = MINHASH_K) -> list[str]:
-    """Python twin of :func:`minhash_signature`.
+    """k-element MinHash signature over a set of strings: element i is
+    ``min(md5(i || ':' || item))``, a salted-hash minimum that the
+    oracle SQL reproduces exactly (``list_aggregate(list_transform(t,
+    s -> md5(concat(i, ':', s))), 'min')``, lexicographic min of hex
+    strings; ``q31_minhash_signatures``).
 
     Bit-identical to md5(f"{i}:{s}") per (band, item); items are
     encoded once and the band prefix reused (measured ~13% faster —

@@ -46,8 +46,10 @@ def _scored_cosine_pairs(
     pair_filter: F.Column | None = None,
 ) -> DataFrame:
     """(query_id, corpus_id, cos_r) for every (broadcast query ×
-    corpus-scan) pair — THE shared scoring contract both top-k
-    operators rank on. Norms are precomputed per ROW before the cross
+    corpus-scan) pair — the exact scoring ``cosine_topk`` ranks on.
+    ``pair_filter`` (optional) excludes pairs BEFORE ranking, e.g.
+    ``F.col(corpus_id) != F.col(query_id)`` for self-exclusion in a
+    shared id space. Norms are precomputed per ROW before the cross
     join (|Q| + |C| folds) instead of per PAIR inside ``cosine``
     (2·|Q|·|C| folds) — ~3× less arithmetic per candidate with a
     bitwise-identical result (same fold expression, same IEEE
@@ -71,7 +73,7 @@ def _scored_cosine_pairs(
 def _rank_topk(scored: DataFrame, query_id: str, corpus_id: str, k: int) -> DataFrame:
     """The shared final ranking: (cos_r desc, corpus_id asc) per query
     — NaN scores rank FIRST (Spark treats NaN as greater than any
-    double under desc), which the pandas prune mirrors."""
+    double under desc)."""
     w = Window.partitionBy(query_id).orderBy(F.col("cos_r").desc(), F.col(corpus_id))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -91,92 +93,12 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k by cosine; rank = (round(cos,9) desc, corpus_id) so
     results are deterministic and engine-comparable. Scoring and
-    ranking live in ``_scored_cosine_pairs`` / ``_rank_topk``, shared
-    verbatim with ``cosine_topk_pruned``."""
+    ranking live in ``_scored_cosine_pairs`` / ``_rank_topk``; the
+    ranking is shared verbatim with ``cosine_topk_gemm``."""
     scored = _scored_cosine_pairs(
         queries, corpus, query_id, query_vec, corpus_id, corpus_vec
     )
     return _rank_topk(scored, query_id, corpus_id, k)
-
-
-def cosine_topk_pruned(
-    queries: DataFrame,
-    corpus: DataFrame,
-    query_id: str,
-    query_vec: str,
-    corpus_id: str,
-    corpus_vec: str,
-    k: int,
-    pair_filter: F.Column | None = None,
-) -> DataFrame:
-    """``cosine_topk`` with a partition-local prune: identical scoring
-    (broadcast queries, JVM codegen, round(cos,9) + corpus-id
-    tiebreak) and identical results, but the scored tuples pass
-    through an Arrow-batched local top-k BEFORE the global rank
-    window, so the window's shuffle input shrinks from |Q|·|C| rows
-    to ≤ |Q|·k per partition — the shape that matters when |C| is the
-    100 TB side (exact top-k is distributive: the global top-k is
-    contained in the union of per-partition top-ks, so pruning loses
-    nothing; equality with ``cosine_topk`` is property-pinned in
-    tests/test_properties.py including exact-tie corpora).
-
-    The prune keeps O(|Q|·k) rows of state per task (a pandas carry
-    frame, re-pruned each batch) — bounded memory regardless of
-    partition size.
-
-    ``pair_filter`` (optional) excludes pairs BEFORE ranking — e.g.
-    ``F.col(corpus_id) != F.col(query_id)`` for self-exclusion in a
-    shared id space; filtering a k+1 result after the fact would
-    mis-rank under duplicate vectors."""
-    from pyspark.sql import types as T
-
-    scored = _scored_cosine_pairs(
-        queries, corpus, query_id, query_vec, corpus_id, corpus_vec, pair_filter
-    ).withColumn("_cos_nan", F.isnan("cos_r"))
-    # ^ the flag must be computed JVM-SIDE: the Arrow hop folds NaN
-    # into pandas' missing-value sentinel, so after the hop NaN and
-    # NULL are indistinguishable — yet Spark ranks NaN FIRST and NULL
-    # LAST under desc, and the prune must preserve exactly that order
-    # (the round-6 NaN-divergence regression, pinned in
-    # test_cosine_topk_pruned_equals_exact)
-
-    def local_topk(batches):
-        import pandas as pd
-
-        carry = None
-        for pdf in batches:
-            both = pdf if carry is None else pd.concat((carry, pdf))
-            # Three stable passes = Spark's (cos_r desc, id asc)
-            # total order: finite scores desc, true-NaN rows hoisted
-            # to the front by the flag, NULL scores left at the back,
-            # corpus-id ties preserved throughout
-            both = both.sort_values(corpus_id, kind="mergesort")
-            both = both.sort_values(
-                "cos_r", ascending=False, na_position="last", kind="mergesort"
-            )
-            both = both.sort_values(
-                "_cos_nan", ascending=False, kind="mergesort"
-            )
-            carry = both.groupby(query_id, sort=False).head(k)
-        if carry is not None and len(carry):
-            yield carry
-
-    pruned = scored.mapInPandas(
-        local_topk,
-        schema=T.StructType(
-            [
-                scored.schema[query_id],
-                scored.schema[corpus_id],
-                T.StructField("cos_r", T.DoubleType()),
-                T.StructField("_cos_nan", T.BooleanType()),
-            ]
-        ),
-    )
-    restored = pruned.withColumn(
-        "cos_r",
-        F.when(F.col("_cos_nan"), F.lit(float("nan"))).otherwise(F.col("cos_r")),
-    ).drop("_cos_nan")
-    return _rank_topk(restored, query_id, corpus_id, k)
 
 
 def cosine_topk_gemm(
@@ -191,12 +113,12 @@ def cosine_topk_gemm(
     c_tag: str | None = None,
     margin: float = 1e-6,
 ) -> DataFrame:
-    """``cosine_topk_pruned`` with BLAS candidate generation — the
-    block-GEMM scheme of ``allpairs_cosine_threshold`` applied to the
-    bounded-queries top-k shape (VERDICT r13 item 5): identical
-    results, but the per-pair scoring runs as ONE numpy matrix
-    multiply per Arrow batch instead of a |Q|·|C| interpreted
-    ``aggregate``-fold tree (HOFs are never codegen'd; measured
+    """``cosine_topk`` with BLAS candidate generation and a
+    partition-local prune — the block-GEMM scheme of
+    ``allpairs_cosine_threshold`` applied to the bounded-queries top-k
+    shape (VERDICT r13 item 5): identical results, but the per-pair
+    scoring runs as ONE numpy matrix multiply per Arrow batch instead
+    of a |Q|·|C| interpreted ``aggregate``-fold tree (HOFs are never codegen'd; measured
     ~10×/element slower than vectorized numpy).
 
     Exactness: per partition the UDF keeps, per query, every corpus
@@ -206,8 +128,8 @@ def cosine_topk_gemm(
     round(·, 9), so any row excluded here sits > margin − 3ε below k
     true scores — strictly below them after rounding, hence provably
     outside the true top-k for ANY id tiebreak. Survivors (≤ |Q|·k
-    plus margin-ties per partition — the same shuffle bound as
-    ``cosine_topk_pruned``) are re-scored with the SAME
+    plus margin-ties per partition, so the rank window's input no
+    longer grows with |C|) are re-scored with the SAME
     ``cosine_ranked`` sequential fold and ranked by the shared
     ``_rank_topk`` window, so emitted values are bit-identical.
     Equality is property-pinned in tests/test_properties.py.
@@ -270,7 +192,7 @@ def cosine_topk_gemm(
 
     # candidates leave the UDF as bare (query_id, corpus_id) PAIRS —
     # never vectors: the Arrow hop folds NaN into pandas' missing-value
-    # sentinel (the round-6 cosine_topk_pruned lesson), so a NaN-
+    # sentinel (the round-6 NaN-divergence lesson), so a NaN-
     # component vector carried through Python would come back as NULL
     # elements and the exact re-verify would score NULL instead of
     # NaN. Vectors re-attach JVM-side via broadcast joins below.

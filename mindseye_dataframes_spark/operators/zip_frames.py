@@ -232,8 +232,6 @@ def with_row_index(
     df: DataFrame,
     order_keys: list[str],
     index_col: str = ROW_INDEX,
-    num_partitions: int | None = None,
-    recompute_safe: bool | None = None,
 ) -> DataFrame:
     """Add a dense 0-based row index following ``order_keys`` order.
 
@@ -245,16 +243,14 @@ def with_row_index(
     permutation the same output multiset, which is the determinism
     the oracle hash actually needs (the q13 lesson).
 
-    ``recompute_safe``: True forces the sampled-boundary path (input
-    evaluated once full-width plus two column-pruned passes), False
-    forces the persisted-range path (input evaluated once, one
-    materialization); None auto-detects from the plan shape.
+    The path follows the plan shape (``_rescan_cheap``): the
+    sampled-boundary path evaluates the input once full-width plus two
+    column-pruned passes, the persisted-range path evaluates it once
+    and pays one materialization.
     """
-    if recompute_safe is None:
-        recompute_safe = _rescan_cheap(df)
-    parts = num_partitions or _default_partitions(df)
+    parts = _default_partitions(df)
 
-    if recompute_safe:
+    if _rescan_cheap(df):
         boundaries = _sample_boundaries(df, order_keys, parts)
         bucketed = df.withColumn(
             "_zip_part", _bucket_expr(df, order_keys, boundaries)
@@ -410,7 +406,13 @@ def zip_frames(
     indexed = [
         with_row_index(df, keys, ROW_INDEX) for df, keys in zip(frames, order_keys)
     ]
-    joined = reduce(lambda a, b: a.join(b, ROW_INDEX, "inner"), indexed)
+    # A fixed join strategy: left to AQE, a small-input join here
+    # broadcasts whichever indexed frame's stage finishes first, so the
+    # executed plan (and its generated classes) would vary from run to
+    # run. At scale AQE plans a shuffle join here anyway.
+    joined = reduce(
+        lambda a, b: a.join(b.hint("shuffle_merge"), ROW_INDEX, "inner"), indexed
+    )
     if index_col:
         joined = joined.withColumnRenamed(ROW_INDEX, index_col)
     else:

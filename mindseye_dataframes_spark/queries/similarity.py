@@ -501,12 +501,13 @@ def q184_knn_label_eval(spark, sf_dir):
     neighbor-id tiebreak), majority-vote their labels (tie → smallest
     label id), and report per-class accuracy in exact integer ppm.
 
-    Scale shape: the eval split is O(eval) rows and BROADCASTS to the
-    corpus, which is scanned once and scored in codegen (q35's
-    contract), and the scored tuples pass through the Arrow-batched
-    partition-local prune (``cosine_topk_pruned``) so the global rank
-    window shuffles ≤ |eval|·k rows per partition instead of
-    |eval|·|C| — the exact-top-k shape that survives a 100 TB corpus.
+    Scale shape: the eval split is O(eval) rows and is collected to
+    the driver; the corpus is scanned once, scored by one BLAS GEMM
+    per Arrow batch and pruned partition-locally
+    (``cosine_topk_gemm``), and the survivors are re-scored with q35's
+    exact ``cosine_ranked`` fold, so the global rank window shuffles
+    ≤ |eval|·k rows per partition instead of |eval|·|C| — the
+    exact-top-k shape that survives a 100 TB corpus.
     Neighbor labels join AFTER top-k as a broadcast of the eval-sized
     result against the corpus scan (corpus never shuffles); the vote
     and per-class rollup are O(eval · k). For a corpus-sized query
@@ -529,7 +530,7 @@ def q184_knn_label_eval(spark, sf_dir):
         F.col("embedding").alias("cv"),
     )
     # BLAS candidate generation + exact cosine_ranked re-verify
-    # (cosine_topk_gemm, r14): bit-identical to the old pruned path —
+    # (cosine_topk_gemm, r14): bit-identical to the exact scorer —
     # equality property-pinned — with the |eval|·|C| interpreted fold
     # tree replaced by one matrix multiply per Arrow batch; the
     # self-exclusion pair filter is the tag pair (shared id space)
@@ -700,17 +701,17 @@ def q194_hard_negative_mining(spark, sf_dir):
     a contrastive/embedding fine-tune wants in its batches (easy
     negatives teach nothing; these sit right at the decision
     boundary). The label-mismatch predicate is applied BEFORE ranking
-    (``pair_filter``) — filtering a top-(k+m) afterwards would
-    under-fill anchors whose neighborhoods are positive-dense.
+    (the ``q_tag``/``c_tag`` pair) — filtering a top-(k+m) afterwards
+    would under-fill anchors whose neighborhoods are positive-dense.
 
-    Scale shape: identical to q184 — anchors broadcast with their
-    labels riding along, the corpus is scanned once and scored in
-    codegen, the label predicate drops pairs pre-rank, and the
-    Arrow-batched partition-local prune (``cosine_topk_pruned``)
-    bounds the rank window's shuffle to ≤ |anchors|·k rows per
-    partition. Anchor/negative labels re-attach AFTER top-k as
-    broadcast joins of the O(|anchors|·k) result — the corpus never
-    shuffles and nothing driver-side scales with |corpus|."""
+    Scale shape: identical to q184 — anchors are collected with their
+    labels riding along, the corpus is scanned once and scored by
+    BLAS GEMM, the label predicate drops pairs pre-rank, and the
+    partition-local prune (``cosine_topk_gemm``) bounds the rank
+    window's shuffle to ≤ |anchors|·k rows per partition.
+    Anchor/negative labels re-attach AFTER top-k as broadcast joins of
+    the O(|anchors|·k) result — the corpus never shuffles and nothing
+    driver-side scales with |corpus|."""
     from mindseye_dataframes_spark.operators.similarity import (
         cosine_topk_gemm,
     )
@@ -728,8 +729,7 @@ def q194_hard_negative_mining(spark, sf_dir):
     )
     # BLAS candidate generation + exact cosine_ranked re-verify
     # (cosine_topk_gemm, r14; equality property-pinned): the label-
-    # mismatch predicate is the tag pair, applied pre-rank exactly as
-    # the old pair_filter was
+    # mismatch predicate is the tag pair, applied pre-rank
     top = cosine_topk_gemm(
         anchors,
         corpus,

@@ -10,8 +10,10 @@ from __future__ import annotations
 
 import datetime
 import decimal
+import hashlib
 import math
 import os
+import re
 
 import duckdb
 
@@ -264,6 +266,43 @@ def assert_matches_oracle(
         + f"\n  (columns: {sp_cols_c})"
     )
     return "exact"
+
+
+def formatted_plan(df) -> str:
+    """The formatted physical plan of a fresh ``executePlan`` over the
+    DataFrame's logical plan — the warm plan a re-run executes."""
+    spark = df.sparkSession
+    qe = df._jdf.queryExecution()
+    return (
+        spark._jsparkSession.sessionState()
+        .executePlan(qe.logical(), qe.mode())
+        .explainString(
+            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+                "formatted"
+            )
+        )
+    )
+
+
+# Numbers a re-run of the same plan may renumber: lambda variables
+# (PySpark numbers their names per process), expression ids (``#123``),
+# exchange plan ids, whole-stage codegen ids and AQE query-stage ids
+# (stages are created as earlier ones finish).
+_PLAN_IDS = re.compile(r"lambda \w+#\d+|#\d+|plan_id=\d+|codegen id : \d+")
+_STAGE_IDS = re.compile(r"(QueryStage\n(?:Output .*\n)?Arguments: )\d+")
+
+
+def last_plan_fingerprint(spark) -> str:
+    """A short hash of the final executed plan of the session's latest
+    SQL execution: the status store's ``physicalPlanDescription``
+    (formatted, AQE's final plan once the execution ends) with run-local
+    ids masked. Two runs with the same fingerprint executed the same
+    physical plan."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    last = store.executionsList(store.executionsCount() - 1, 1).apply(0)
+    masked = _STAGE_IDS.sub(r"\1#", _PLAN_IDS.sub("#", last.physicalPlanDescription()))
+    return hashlib.sha256(masked.encode()).hexdigest()[:12]
 
 
 COVTYPE_LABELS = 7

@@ -10,6 +10,7 @@ paths. A green correctness suite with a wrong plan is a latent
 from __future__ import annotations
 
 from mindseye_dataframes_spark.queries import load_all
+from tests.helpers import formatted_plan
 
 REGISTRY = load_all()
 
@@ -19,13 +20,7 @@ def plan_of(spark, sf_dir, name: str) -> str:
 
 
 def explain_formatted(spark, sf_dir, name: str) -> str:
-    df = REGISTRY[name].fn(spark, sf_dir)
-    return df.sparkSession._jsparkSession.sessionState().executePlan(
-        df._jdf.queryExecution().logical(),
-        df._jdf.queryExecution().mode(),
-    ).explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
+    return formatted_plan(REGISTRY[name].fn(spark, sf_dir))
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -241,6 +236,16 @@ def test_zip_sampled_path_no_cache_no_range_exchange(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "q13_zip_positional")
     assert "InMemoryTableScan" not in plan
     assert "rangepartitioning" not in plan.lower()
+
+
+def test_zip_index_join_has_a_fixed_strategy(spark, sf_dir):
+    """The generic zip's final join on the row index is a sort-merge
+    join. Left to AQE, the small-input join would broadcast whichever
+    indexed frame's stage finishes first, so q13 would run one of two
+    executed plans from pass to pass."""
+    plan = plan_of(spark, sf_dir, "q13_zip_positional")
+    top_join = next(line for line in plan.splitlines() if "Join" in line)
+    assert "SortMergeJoin" in top_join and "_zip_index" in top_join, plan
 
 
 def test_zip_persist_path_for_expensive_upstream(spark):

@@ -919,49 +919,6 @@ def test_paragraph_dedup_rewrite_semantics(spark, tmp_path_factory):
     assert got[0]["kept_chars"] == len(X + " " + Y)
 
 
-def test_cosine_topk_pruned_equals_exact(spark):
-    """The partition-local prune must be invisible: identical
-    (query, rank, neighbor, score) rows as cosine_topk, including
-    under exact ties (duplicated corpus vectors) and across multiple
-    partitions/batches."""
-    import numpy as np
-
-    from mindseye_dataframes_spark.operators.similarity import (
-        cosine_topk,
-        cosine_topk_pruned,
-    )
-
-    rng = np.random.default_rng(17)
-    vecs = [[float(x) for x in rng.normal(0, 1, 8)] for _ in range(120)]
-    # exact ties: clones of vector 0 scattered through the corpus
-    for i in (30, 60, 90):
-        vecs[i] = list(vecs[0])
-    # NaN-poisoned corpus vectors: cos_r is NaN, which Spark's desc
-    # window ranks FIRST — the pandas prune must keep them too, in
-    # corpus-id order (the round-6 NaN divergence regression). Note
-    # zero-NORM vectors are not the NaN path on Spark 4: ANSI mode
-    # raises DIVIDE_BY_ZERO for them in BOTH operators identically.
-    for i in (45, 75):
-        vecs[i] = [float("nan")] * 8
-    corpus = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(vecs)], "cid long, cv array<double>"
-    ).repartition(7)
-    queries = spark.createDataFrame(
-        [(i, vecs[i]) for i in range(5)], "qid long, qv array<double>"
-    )
-    exact = cosine_topk(queries, corpus, "qid", "qv", "cid", "cv", 10)
-    pruned = cosine_topk_pruned(queries, corpus, "qid", "qv", "cid", "cv", 10)
-
-    def rows(df):
-        # NaN != NaN under tuple equality — normalize to a sentinel
-        return sorted(
-            tuple("NaN" if isinstance(v, float) and v != v else v for v in r)
-            for r in df.collect()
-        )
-
-    assert rows(exact) == rows(pruned)
-
-
 def test_ivf_postings_path_matches_direct_ivf(spark):
     """Storage independence of the standing ANN index: given the same
     centroids, ``ann_topk_ivf_postings`` over an explicitly built
@@ -1168,18 +1125,21 @@ def test_allpairs_cosine_threshold_equals_theta_join(spark):
         assert [key(t) for t in got] == [key(t) for t in want], rows_per_block
 
 
-def test_cosine_topk_gemm_equals_pruned(spark):
+def test_cosine_topk_gemm_equals_exact(spark):
     """The BLAS candidate generator must be invisible: identical
-    (query, rank, neighbor, score) rows as cosine_topk_pruned —
-    including exact ties (cloned corpus vectors), NaN-poisoned
-    vectors (rank FIRST), multiple partitions, and both tag-exclusion
-    modes (self-id for q184, label for q194). The exact re-verify
-    runs the same cosine_ranked fold, so scores are bit-identical."""
+    (query, rank, neighbor, score) rows as the exact scorer
+    (``_scored_cosine_pairs`` ranked by ``_rank_topk``, which is
+    ``cosine_topk``) — including exact ties (cloned corpus vectors),
+    NaN-poisoned vectors (rank FIRST), multiple partitions, and both
+    tag-exclusion modes (self-id for q184, label for q194). The exact
+    re-verify runs the same cosine_ranked fold, so scores are
+    bit-identical."""
     import numpy as np
 
     from mindseye_dataframes_spark.operators.similarity import (
+        _rank_topk,
+        _scored_cosine_pairs,
         cosine_topk_gemm,
-        cosine_topk_pruned,
     )
     from pyspark.sql import functions as F
 
@@ -1205,33 +1165,27 @@ def test_cosine_topk_gemm_equals_pruned(spark):
             for r in df.collect()
         )
 
+    def exact(pair_filter=None):
+        scored = _scored_cosine_pairs(
+            queries, corpus, "qid", "qv", "cid", "cv", pair_filter=pair_filter
+        )
+        return _rank_topk(scored, "qid", "cid", 10)
+
     # no filter
     assert rows(
         cosine_topk_gemm(queries, corpus, "qid", "qv", "cid", "cv", 10)
-    ) == rows(
-        cosine_topk_pruned(queries, corpus, "qid", "qv", "cid", "cv", 10)
-    )
+    ) == rows(exact())
     # self-exclusion by shared id (q184's shape)
     assert rows(
         cosine_topk_gemm(
             queries, corpus, "qid", "qv", "cid", "cv", 10,
             q_tag="qid", c_tag="cid",
         )
-    ) == rows(
-        cosine_topk_pruned(
-            queries, corpus, "qid", "qv", "cid", "cv", 10,
-            pair_filter=F.col("cid") != F.col("qid"),
-        )
-    )
+    ) == rows(exact(F.col("cid") != F.col("qid")))
     # label mismatch (q194's shape)
     assert rows(
         cosine_topk_gemm(
             queries, corpus, "qid", "qv", "cid", "cv", 10,
             q_tag="q_label", c_tag="c_label",
         )
-    ) == rows(
-        cosine_topk_pruned(
-            queries, corpus, "qid", "qv", "cid", "cv", 10,
-            pair_filter=F.col("c_label") != F.col("q_label"),
-        )
-    )
+    ) == rows(exact(F.col("c_label") != F.col("q_label")))

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import os
 import sys
 
 import pytest
@@ -9,6 +10,7 @@ import pytest
 from mindseye_dataframes_spark.compat import codegen_compile_count
 from mindseye_dataframes_spark.queries import load_all
 from mindseye_dataframes_spark.session import CODEGEN_CACHE_MAX_ENTRIES
+from tests.helpers import last_plan_fingerprint
 
 
 def test_warm_headline_pass_compiles_nothing(spark, sf_dir):
@@ -16,32 +18,31 @@ def test_warm_headline_pass_compiles_nothing(spark, sf_dir):
     default 100-entry codegen cache every pass evicted them all and the
     next pass Janino-compiled ~150 again.
 
-    The first pass fills the cache. A later pass can still meet a plan
-    variant for the first time: AQE picks some join build sides by
-    which branch finishes first (q13's final zip join has two), and
-    each variant compiles once. So within four more passes one must
-    compile nothing."""
+    The cold pass fills the cache, so a warm pass must compile
+    nothing. That also needs one executed plan per query: a join whose
+    build side AQE picks by which branch finishes first runs a second
+    plan variant on some pass and compiles its classes then (q13's
+    final zip join, without its join hint). So each query must show
+    one final-plan fingerprint across all three passes. The queries run
+    at sf0.01, the scale the oracles are checked at."""
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
         CODEGEN_CACHE_MAX_ENTRIES
     )
     headline = [q for _, q in sorted(load_all().items()) if q.bench]
     assert len(headline) == 8
+    gate_sf_dir = os.path.join(os.path.dirname(sf_dir), "sf0.01")
 
-    def drain_pass() -> dict[str, int]:
+    compiled = {q.name: [] for q in headline}
+    plans = {q.name: set() for q in headline}
+    for _ in range(3):
         spark.catalog.clearCache()
-        compiled = {}
         for q in headline:
             before = codegen_compile_count(spark)
-            q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            compiled[q.name] = codegen_compile_count(spark) - before
-        return compiled
-
-    passes = [drain_pass()]
-    for _ in range(4):
-        passes.append(drain_pass())
-        if not any(passes[-1].values()):
-            break
-    assert not any(passes[-1].values()), f"compiles per pass: {passes}"
+            q.fn(spark, gate_sf_dir).write.format("noop").mode("overwrite").save()
+            compiled[q.name].append(codegen_compile_count(spark) - before)
+            plans[q.name].add(last_plan_fingerprint(spark))
+    assert not any(any(c[1:]) for c in compiled.values()), f"compiles per pass: {compiled}"
+    assert all(len(p) == 1 for p in plans.values()), f"plan fingerprints: {plans}"
 
 
 def _zip_cache_probe(batches):
