@@ -12,11 +12,14 @@ Rebuild of the reference's core (`DataframeModeler.scala`,
   runs ONCE and is cached in the ModelContext, fixing the reference's
   per-eval rescan (SURVEY §4.3a). It is ONE aggregate query (A1): the
   numeric moments, the vector dimensions and the count of label values
-  the strategy cannot encode. Moments accumulate in exact decimal, one
-  cast per value, so the derived parameters are bit-reproducible.
-  Keys a strategy can enumerate (one-hot labels, hashed buckets) need
-  no scan; only the other categorical paths add a distinct-keys
-  query (A2).
+  the strategy cannot encode, grouped over stacked ``(i, x, k)`` rows
+  so the generated code has one width for any column count. The
+  moments are exact: each value's decimal(14,4) unscaled long, summed
+  as 24-bit limbs in long sums and rebuilt on the driver as Python
+  ints, give the decimal sums' doubles bit for bit, so the derived
+  parameters are reproducible. Keys a strategy can enumerate (one-hot
+  labels, hashed buckets) need no scan; only the other categorical
+  paths add a distinct-keys query (A2).
 - **Batch inference** ``eval_to_dataframe`` (M1,
   `ModelingStrategy.scala:167-186`): broadcast params → Arrow-batched
   ``mapInPandas`` forward → ``name: array<double>`` column.
@@ -41,7 +44,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -96,6 +99,87 @@ def _label_channel(chans: list[Channel], label_col: str) -> Channel:
             f"{[c.col for c in chans]}"
         )
     return found
+
+
+# init_keys sums v, the unscaled decimal(14,4) value of each numeric
+# input as a long, in 24-bit limbs: every summed term is below 2^24 in
+# magnitude, so each long sum is exact up to 2^39 rows.
+_LIMB_BITS = 24
+_LIMB_MASK = (1 << _LIMB_BITS) - 1
+MAX_MOMENT_ROWS = 1 << 39
+_LIMB_SUMS = ("l", "h", "ll0", "ll1", "hl0", "hl1", "hh0", "hh1")
+_EMPTY_GROUP = {"n": 0, "nv": 0, "kmax": None, "kcount": 0, **dict.fromkeys(_LIMB_SUMS)}
+
+
+def _stacked_aggregate(
+    df: DataFrame, entries: list[tuple[Column | None, Column | None]]
+) -> list[Row | dict]:
+    """ONE grouped aggregate over ``df`` for a list of ``(x, k)``
+    entries: entry i stacks one ``(i, x, k)`` row per input row, and
+    group i returns ``n = count(x)``, ``nv`` (the x that have an exact
+    v), the limb sums of v (see ``_exact_sums``), ``kmax = max(k)`` and
+    ``kcount = count(k)``, in entry order. A group with no input has no
+    row; it reads as ``_EMPTY_GROUP``. The generated code has the same
+    width for any number of entries; one aggregate column per entry and
+    moment would leave whole-stage codegen past 100 buffer fields
+    (``spark.sql.codegen.maxFields``)."""
+    if not entries:
+        return []
+    rows = F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("i"),
+                (F.lit(None) if x is None else x).cast("double").alias("x"),
+                (F.lit(None) if k is None else k).cast("int").alias("k"),
+            )
+            for i, (x, k) in enumerate(entries)
+        ]
+    )
+    x = F.col("x")
+    # v without a decimal: r = rint(x·1e4) is v when r / 1e4 == x, as
+    # Double.toString(x), which the decimal cast rounds, then lies within
+    # ulp(x) < 5e-5 of r / 1e4. The other values (more than 4 decimals)
+    # take the decimal(14,4) cast; try_cast turns one that does not fit
+    # into NULL under either ANSI setting, and n - nv reports it.
+    r = F.rint(x * 1e4)
+    v = F.when((F.abs(r) < 1e14) & (r / 1e4 == x), r.cast("long")).otherwise(
+        (x.try_cast("decimal(14,4)") * 10**4).cast("long")
+    )
+    stacked = (
+        df.select(F.inline(rows))
+        .withColumn("v", v)
+        .select(
+            "i", "x", "k", "v",
+            F.shiftright("v", _LIMB_BITS).alias("h"),
+            F.col("v").bitwiseAND(_LIMB_MASK).alias("l"),
+        )
+    )
+    h, lo = F.col("h"), F.col("l")
+    # v = h·2^24 + l with |h| < 2^23 and 0 <= l < 2^24; each product
+    # splits into its low 24 bits and the (signed) rest
+    terms = {"l": lo, "h": h}
+    for name, p in (("ll", lo * lo), ("hl", h * lo), ("hh", h * h)):
+        terms[f"{name}0"] = p.bitwiseAND(_LIMB_MASK)
+        terms[f"{name}1"] = F.shiftright(p, _LIMB_BITS)
+    agg = stacked.groupBy("i").agg(
+        F.count("x").alias("n"),
+        F.count("v").alias("nv"),
+        *[F.sum(terms[name]).alias(name) for name in _LIMB_SUMS],
+        F.max("k").alias("kmax"),
+        F.count("k").alias("kcount"),
+    )
+    found = {row["i"]: row for row in agg.collect()}
+    return [found.get(i, _EMPTY_GROUP) for i in range(len(entries))]
+
+
+def _exact_sums(group) -> tuple[int, int]:
+    """Σv and Σv², exactly, from a group's limb sums:
+    v = h·2^24 + l, so v² = h²·2^48 + 2·h·l·2^24 + l²."""
+    s = {name: int(group[name] or 0) for name in _LIMB_SUMS}
+    joined = lambda name: (s[f"{name}1"] << _LIMB_BITS) + s[f"{name}0"]  # noqa: E731
+    sv = (s["h"] << _LIMB_BITS) + s["l"]
+    sq = (joined("hh") << 2 * _LIMB_BITS) + (joined("hl") << _LIMB_BITS + 1) + joined("ll")
+    return sv, sq
 
 
 class DictionaryOverflowError(RuntimeError):
@@ -190,7 +274,9 @@ class DataframeModeler:
         keys: list[str] = []
         discover: list[Channel] = []
         checks: list[tuple[Channel, str]] = []
-        aggs = []
+        # one (x, k) entry per aggregate group, in the order of
+        # checks + nums + vecs (see _stacked_aggregate)
+        entries: list[tuple[Column | None, Column | None]] = []
         for ch in chans:
             if ch.kind != "categorical":
                 continue
@@ -205,47 +291,39 @@ class DataframeModeler:
             check = self.strategy.unencodable(ch.path, ch.dtype, F.col(ch.col))
             if check is not None:
                 flag, requirement = check
-                aggs.append(F.count(F.when(flag, 1)).alias(f"u__{ch.path}"))
+                entries.append((None, F.when(flag, 1)))
                 checks.append((ch, requirement))
         for ch in nums:
             src = F.col(ch.col).cast("double") if ch.dtype == "timestamp" else F.col(ch.col)
-            # NaN counts as missing, as in _featurize (z = 0)
-            src = F.nanvl(src, F.lit(None))
-            # The moments are exact decimal sums (functions/exact.py) over
-            # ONE double → decimal cast per value. try_cast turns a value
-            # that does not fit decimal(14,4) into NULL under either ANSI
-            # setting; the count difference reports it. Σx widens that
-            # same decimal to (18,4), keeping the decimal(28,4) sum
-            # buffer: a cast rounds the double to 4 decimals whatever the
-            # precision, so for every input that does not raise, Σx is
-            # the one a direct decimal(18,4) cast gives.
-            x = src.try_cast("decimal(14,4)")
-            aggs += [
-                F.count(src).alias(f"n__{ch.path}"),
-                (F.count(src) - F.count(x)).alias(f"o__{ch.path}"),
-                F.sum(x.cast("decimal(18,4)")).cast("double").alias(f"s__{ch.path}"),
-                F.sum(x * x).cast("double").alias(f"q__{ch.path}"),
-            ]
+            # NaN counts as missing, as in _featurize (z = 0); the
+            # moments are exact sums of each value's decimal(14,4)
+            entries.append((F.nanvl(src, F.lit(None)), None))
         # the vector dimension: the longest array seen (ragged rows
         # pad/truncate to it in _featurize)
-        aggs += [F.max(F.size(F.col(ch.col))).alias(f"d__{ch.path}") for ch in vecs]
+        entries += [(None, F.size(F.col(ch.col))) for ch in vecs]
 
         # one query for every check, moment and dimension; it raises
         # before the context is touched
-        row = df.agg(*aggs).collect()[0] if aggs else None
-        for ch, requirement in checks:
-            if row[f"u__{ch.path}"]:
+        groups = _stacked_aggregate(df, entries)
+        num_groups = groups[len(checks) : len(checks) + len(nums)]
+        for (ch, requirement), g in zip(checks, groups):
+            if g["kcount"]:
                 raise ValueError(
-                    f"categorical column {ch.col!r} has {row[f'u__{ch.path}']} "
+                    f"categorical column {ch.col!r} has {g['kcount']} "
                     f"value(s) {type(self.strategy).__name__} cannot encode: "
                     f"each must be {requirement}"
                 )
-        for ch in nums:
-            if row[f"o__{ch.path}"]:
+        for ch, g in zip(nums, num_groups):
+            if g["n"] - g["nv"]:
                 raise ValueError(
-                    f"numeric column {ch.col!r} has {row[f'o__{ch.path}']} "
+                    f"numeric column {ch.col!r} has {g['n'] - g['nv']} "
                     "value(s) outside the exact-moment range: finite, "
                     "|x| < 1e10 at 4 decimals"
+                )
+            if g["n"] > MAX_MOMENT_ROWS:
+                raise ValueError(
+                    f"numeric column {ch.col!r} has {g['n']} non-null values, "
+                    f"more than the {MAX_MOMENT_ROWS} the exact moments can sum"
                 )
 
         if discover:
@@ -258,10 +336,13 @@ class DataframeModeler:
             if self.strategy.is_frozen(key):
                 self.context.frozen.add(key)
 
-        for ch in nums:
-            n = float(row[f"n__{ch.path}"] or 0)
-            s = float(row[f"s__{ch.path}"] or 0.0)
-            q = float(row[f"q__{ch.path}"] or 0.0)
+        for ch, g in zip(nums, num_groups):
+            n = float(g["n"])
+            sv, sq = _exact_sums(g)
+            # int / int is correctly rounded, as is Spark's decimal →
+            # double cast: these are the doubles of the decimal sums
+            # Σx (scale 4) and Σx² (scale 8)
+            s, q = sv / 10**4, sq / 10**8
             mean = s / n if n else 0.0
             std = float(np.sqrt(abs(q / n - mean * mean))) if n else 1.0  # F6
             self.context.stats[ch.path] = (n, mean, std if std > 0 else 1.0)
@@ -272,10 +353,10 @@ class DataframeModeler:
                 init = seeded_unit_rms_tensor(tkey, p * size).reshape(p, size)
                 self.context.transforms[tkey] = init / np.sqrt(p)
 
-        for ch in vecs:
+        for ch, g in zip(vecs, groups[len(checks) + len(nums) :]):
             # size(NULL) is -1 with ANSI off: an all-NULL column has no
             # dimension either way
-            d = max(int(row[f"d__{ch.path}"] or 0), 0)
+            d = max(int(g["kmax"] or 0), 0)
             key = f"vector/{ch.path}"
             if d and key not in self.context.transforms:
                 size = self.strategy.size(ch.path)

@@ -4,10 +4,12 @@ Floating-point SUM/AVG results depend on accumulation order, which
 differs run-to-run under parallel execution and engine-to-engine
 (Spark vs the DuckDB oracle). For hash-checked results we accumulate
 in exact decimal arithmetic and only convert to double at the end:
-the double→decimal rounding of each input is deterministic (no double
-is an exact decimal tie), decimal sums are exact, and decimal→double
-conversion is correctly rounded in both engines — so the final double
-is bit-identical regardless of partitioning or engine.
+the double→decimal rounding of each input is deterministic (a double
+can be an exact tie at the target scale, 0.125 at 2 decimals or
+0.03125 at 4, and both engines round a tie away from zero), decimal
+sums are exact, and decimal→double conversion is correctly rounded in
+both engines — so the final double is bit-identical regardless of
+partitioning or engine.
 
 This is also the right call at 100 TB: results stay stable across
 AQE re-plans, speculative re-execution, and partition-count changes.
@@ -51,8 +53,9 @@ def dsum(col: Column | str, scale: int = SCALE) -> Column:
 #    Java BigDecimal rounds once — off-by-1-ulp mismatches. So pick
 #    product scales such that sums keep unscaled < 2^53.
 # 2. NEVER rescale a decimal (CAST to lower scale) on the comparison
-#    path: decimal values *can* be exact ties at the target scale
-#    (unlike doubles), and Spark (HALF_UP) and DuckDB disagree there.
+#    path: decimal values are exact ties at the target scale far more
+#    often than doubles (any 0.xx5), and Spark (HALF_UP) and DuckDB
+#    disagree there.
 #
 # Rule of thumb for this dataset (measures are exactly 2-decimal):
 # factors at scale 2 → products at scale ≤6 → sums stay exact and
@@ -87,8 +90,9 @@ def davg(col: Column | str, scale: int = SCALE) -> Column:
 
 def cents(col: Column | str, k: int = 2) -> Column:
     """round(x·10^k) as BIGINT — exact for k-decimal measures. The
-    *100 product sits ~1e-12 from an integer, so HALF_UP (Spark) vs
-    half-away (DuckDB) can never disagree (no exact ties)."""
+    ·10^k product of a k-decimal measure sits ~1e-12 from an integer;
+    a product that is an exact .5 (0.125 at k=2) rounds away from zero
+    in both engines (Spark HALF_UP, DuckDB half-away), so they agree."""
     c = F.col(col) if isinstance(col, str) else col
     return F.round(c * (10**k)).cast("long")
 

@@ -70,8 +70,11 @@ _ordered: dict[str, Query] = {}
 # of the window. Drop a query from it once a CORRECTNESS file shows
 # it green again.
 REFRESH: set[str] = {
-    # DataframeModeler.init_keys became one aggregate with one decimal
-    # cast per value
+    # DataframeModeler.init_keys computes its moments with exact long
+    # limb sums over one grouped aggregate
+    "q37_zscore_expansion",
+    "q38_onehot_labels",
+    "q39_param_identity",
     "q40_featurize_pipeline",
     "q65_featurize_temporal_embedding",
     "q78_eval_identity",

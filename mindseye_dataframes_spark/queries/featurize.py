@@ -150,13 +150,17 @@ def _moments_sql(col: str, table: str = "lineitem") -> str:
     derivation ``init_keys`` performs (sum DECIMAL(18,4), sum of
     DECIMAL(14,4) squares, single cast→divide→sqrt IEEE sequence).
 
-    ``init_keys`` casts each double once, to DECIMAL(14,4), and sums
-    that value widened to DECIMAL(18,4). The direct DECIMAL(18,4) cast
-    here gives the same sum: a cast rounds the double to 4 decimals
-    whatever the precision, and ``init_keys`` raises for any value the
-    DECIMAL(14,4) cast cannot hold, so on every input it accepts the
-    two casts agree value by value. The SQL keeps the direct cast: it
-    is the independent reference the oracle checks compare against."""
+    ``init_keys`` reaches the same doubles without decimal sums. It
+    takes each value's DECIMAL(14,4) unscaled long v (``rint(x·1e4)``
+    when that is exactly x, else the cast itself, so both round a tie
+    away from zero), sums v and v² exactly as 24-bit limbs in long
+    sums, and divides the rebuilt integers by 10^4 and 10^8 on the
+    driver: an int division that is correctly rounded, like the
+    decimal → double cast here. The DECIMAL(18,4) cast of Σx gives the
+    same sum: a cast rounds the double to 4 decimals whatever the
+    precision, and ``init_keys`` raises for any value DECIMAL(14,4)
+    cannot hold. The SQL keeps the decimal casts: it is the
+    independent reference the oracle checks compare against."""
     return f"""
       SELECT
         CAST(SUM(CAST({col} AS DECIMAL(18,4))) AS DOUBLE)
@@ -223,7 +227,7 @@ def _pin_rank_representations(modeler, path: str, scales: tuple[float, ...]) -> 
 def q40_featurize_pipeline(spark, sf_dir):
     """M1 end-to-end, driver-hash-checked (VERDICT r5 item 3): the
     REAL featurize pipeline — schema recursion over three numeric +
-    two categorical channels, init_keys' exact-decimal moments,
+    two categorical channels, init_keys' exact moments,
     broadcast params, Arrow-batched mapInPandas forward, struct-sum
     reduction (F3) of all five channels into one size-2 feature — with
     the numeric transforms pinned to [[0,0],[1,c]] (c a power of two)

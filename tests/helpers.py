@@ -292,16 +292,20 @@ _PLAN_IDS = re.compile(r"lambda \w+#\d+|#\d+|plan_id=\d+|codegen id : \d+")
 _STAGE_IDS = re.compile(r"(QueryStage\n(?:Output .*\n)?Arguments: )\d+")
 
 
-def last_plan_fingerprint(spark) -> str:
-    """A short hash of the final executed plan of the session's latest
-    SQL execution: the status store's ``physicalPlanDescription``
-    (formatted, AQE's final plan once the execution ends) with run-local
-    ids masked. Two runs with the same fingerprint executed the same
-    physical plan."""
+def last_plan_description(spark) -> str:
+    """The status store's ``physicalPlanDescription`` of the session's
+    latest SQL execution: formatted, with AQE's final plan once the
+    execution ends."""
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     store = spark._jsparkSession.sharedState().statusStore()
-    last = store.executionsList(store.executionsCount() - 1, 1).apply(0)
-    masked = _STAGE_IDS.sub(r"\1#", _PLAN_IDS.sub("#", last.physicalPlanDescription()))
+    return store.executionsList(store.executionsCount() - 1, 1).apply(0).physicalPlanDescription()
+
+
+def last_plan_fingerprint(spark) -> str:
+    """A short hash of ``last_plan_description`` with run-local ids
+    masked. Two runs with the same fingerprint executed the same
+    physical plan."""
+    masked = _STAGE_IDS.sub(r"\1#", _PLAN_IDS.sub("#", last_plan_description(spark)))
     return hashlib.sha256(masked.encode()).hexdigest()[:12]
 
 

@@ -15,12 +15,14 @@ from mindseye_dataframes_spark.featurize import (
     ModelContext,
     ModelingStrategy,
 )
+from mindseye_dataframes_spark.featurize import modeler as modeler_module
 from mindseye_dataframes_spark.featurize.layers import Dense, Network, ReLU, mlp
 from mindseye_dataframes_spark.functions.hashing import (
     hmac_sha1_seed,
     name_uuid,
     seeded_unit_rms_tensor,
 )
+from tests.helpers import last_plan_description
 
 
 def test_name_uuid_matches_java_scheme():
@@ -468,11 +470,11 @@ def test_init_keys_runs_one_aggregate_query(spark, ansi):
 
 
 def _two_cast_stats(df) -> dict:
-    """The moments as computed before one cast served both sums: Σx over
-    its own decimal(18,4) cast, Σx² over decimal(14,4)."""
+    """The decimal reference moments: Σx over its own decimal(18,4)
+    cast, Σx² over decimal(14,4), each decimal sum cast to double."""
     aggs = []
-    for c in df.columns:
-        src = F.nanvl(F.col(c), F.lit(None))
+    for c, dtype in df.dtypes:
+        src = F.nanvl(F.col(c).cast("double") if dtype == "timestamp" else F.col(c), F.lit(None))
         s14 = src.try_cast("decimal(14,4)")
         aggs += [
             F.count(src).alias(f"n_{c}"),
@@ -492,14 +494,17 @@ def _two_cast_stats(df) -> dict:
 
 
 def test_one_cast_moments_match_two_cast_reference(spark, ansi):
-    """Σx over the decimal(14,4) value widened to (18,4) is the Σx of a
-    direct decimal(18,4) cast, bit for bit, on values that stress the
-    4-decimal rounding, the sign and the range bound."""
+    """The limb-sum moments equal the decimal reference bit for bit, on
+    values that stress the 4-decimal rounding (binary ties such as
+    ±0.03125 round away from zero), the sign, the range bound, floats
+    and timestamps, at 1 and at 7 partitions."""
     big = 9_999_999_999.9999
     i = F.col("id")
     df = spark.range(3000).select(
         (i / 7).alias("sevenths"),
+        (i * 1.00005).cast("float").alias("floats"),
         (i * 0.00005).alias("ties"),
+        ((i - 1500) / 32).alias("binary_ties"),
         (-(i / 3) - i * 0.00015).alias("negatives"),
         F.when(i % 3 == 0, -big).otherwise(big).alias("bound"),
         F.when(i % 5 == 0, F.lit(None))
@@ -507,12 +512,35 @@ def test_one_cast_moments_match_two_cast_reference(spark, ansi):
         .otherwise(i / 3)
         .alias("null_nan"),
         F.lit(None).cast("double").alias("all_null"),
+        F.timestamp_micros((i - 1000) * 987_654_321_017).alias("ts"),
     )
-    modeler = DataframeModeler(ModelingStrategy(default_size=4))
-    modeler.init_keys(df)
     want = _two_cast_stats(df)
-    assert modeler.context.stats == want
+    for frame in (df.coalesce(1), df.repartition(7)):
+        modeler = DataframeModeler(ModelingStrategy(default_size=4))
+        modeler.init_keys(frame)
+        assert modeler.context.stats == want
     assert want["all_null"] == (0.0, 0.0, 1.0) and want["null_nan"][0] == 1800.0
+
+
+def test_init_keys_rejects_columns_past_the_exact_row_ceiling(spark, ansi, monkeypatch):
+    """Past MAX_MOMENT_ROWS non-null values the limb sums may overflow
+    a long: init_keys names the column instead of returning moments."""
+    monkeypatch.setattr(modeler_module, "MAX_MOMENT_ROWS", 3)
+    assert _numeric_stats(spark, [1.0, 2.0, 3.0, None])[0] == 3.0
+    with pytest.raises(ValueError, match=r"column 'x' has 4 non-null values, more than the 3"):
+        _numeric_stats(spark, [1.0, 2.0, 3.0, 4.0])
+
+
+def test_moment_aggregate_stays_in_whole_stage_codegen(spark):
+    """The moment aggregate has a fixed width: at 40 numeric columns its
+    final plan still runs every HashAggregate in whole-stage codegen. An
+    aggregate with a column per moment leaves it from 17 columns on
+    (over spark.sql.codegen.maxFields = 100 buffer fields)."""
+    df = spark.range(100).select(*[(F.col("id") / (c + 1)).alias(f"c{c}") for c in range(40)])
+    DataframeModeler(ModelingStrategy(default_size=4)).init_keys(df)
+    final = last_plan_description(spark).split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    aggregates = [line for line in final.splitlines() if "HashAggregate" in line]
+    assert len(aggregates) == 2 and all("* HashAggregate" in line for line in aggregates), final
 
 
 def test_value_index_label_enumerates_exactly_its_keys(spark):
@@ -592,12 +620,17 @@ def test_bucketed_overlay_keeps_the_label_check(spark):
 
 def test_all_null_vector_column_has_no_dimension(spark, ansi):
     """size(NULL) is -1 with ANSI off; an all-NULL vector column still
-    gets no transform rather than a negative dimension."""
-    df = spark.createDataFrame([(1.0, None), (2.0, None)], "x double, emb array<double>")
-    modeler = DataframeModeler(ModelingStrategy(default_size=4))
-    modeler.init_keys(df)
-    assert "vector/emb" not in modeler.context.transforms
-    assert np.allclose(modeler.context.stats["x"], (2.0, 1.5, 0.5))
+    gets no transform rather than a negative dimension. The aggregate
+    returns no row for a group with no input: an all-NULL numeric
+    column and a 0-row frame still give (0.0, 0.0, 1.0), no vector
+    transform and no label error."""
+    schema = "x double, blank double, emb array<double>, label int"
+    rows = [(1.0, None, None, 1), (2.0, None, None, 2)]
+    for data, x_stats in ((rows, (2.0, 1.5, 0.5)), ([], (0.0, 0.0, 1.0))):
+        modeler = DataframeModeler(CategorizingStrategy("label", categories=2, base=1, default_size=4))
+        modeler.init_keys(spark.createDataFrame(data, schema), "label")
+        assert "vector/emb" not in modeler.context.transforms
+        assert modeler.context.stats == {"x": x_stats, "blank": (0.0, 0.0, 1.0)}
 
 
 def test_label_name_suffix_is_an_ordinary_categorical(spark):

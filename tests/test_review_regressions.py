@@ -273,6 +273,33 @@ def test_tuple_rank_no_id_ceiling(spark):
     assert oracle_survivor == 9_223_372_036_854
 
 
+def test_exact_decimal_ties_round_away_from_zero_in_both_engines(spark):
+    """A double can be an exact tie at the target scale: 0.03125 at 4
+    decimals, 0.125 at 2. Spark's casts and ``cents`` round each away
+    from zero, as DuckDB's casts and ROUND do (functions/exact.py)."""
+    import duckdb
+
+    from mindseye_dataframes_spark.functions.exact import cents, dec
+
+    ties = [0.03125, -0.03125, 0.125, -0.125]
+    df = spark.createDataFrame(list(enumerate(ties)), "i int, x double")
+    got = [
+        tuple(r)[1:]
+        for r in df.select("i", dec("x"), dec("x", scale=2), cents("x")).orderBy("i").collect()
+    ]
+    want = duckdb.sql(
+        "SELECT CAST(x AS DECIMAL(18,4)), CAST(x AS DECIMAL(18,2)), "
+        "CAST(ROUND(x * 100) AS BIGINT) "
+        f"FROM (VALUES {', '.join(f'({i}, {t}::DOUBLE)' for i, t in enumerate(ties))}) t(i, x) "
+        "ORDER BY i"
+    ).fetchall()
+    assert got == want
+    assert [str(r[0]) for r in got] == ["0.0313", "-0.0313", "0.1250", "-0.1250"]
+    assert [(str(r[1]), r[2]) for r in got] == [
+        ("0.03", 3), ("-0.03", -3), ("0.13", 13), ("-0.13", -13)
+    ]
+
+
 def test_asof_tolerance_nulls_stale_matches(spark):
     """tolerance_seconds must null the payload when the matched right
     row is older than the bound — exactly as if no row preceded — and
