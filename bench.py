@@ -4,7 +4,8 @@ local[$SPARK_GRAFT_CPUS] and print ONE JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
 
 Each query executes through the ``noop`` sink so the full plan runs
-(scan → shuffle → agg) without driver-collect or disk-write skew.
+(scan → shuffle → agg) without driver-collect or disk-write skew, inside
+one ``measure.record`` (``layers`` holds each query's fastest).
 
 Two strictly ordered phases (VERDICT r7 item 1: the r6→r7 headline
 "regression" was ~1.5 s of session contamination from interleaving the
@@ -20,11 +21,10 @@ session):
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import re
-import sys
-import time
 
 
 def main() -> None:
@@ -33,6 +33,7 @@ def main() -> None:
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
 
+    from mindseye_dataframes_spark.measure import passes
     from mindseye_dataframes_spark.queries import load_all
     from mindseye_dataframes_spark.session import get_session
 
@@ -40,114 +41,67 @@ def main() -> None:
     registry = load_all()
     bench_queries = {n: q for n, q in sorted(registry.items()) if q.bench}
     # the heavy non-headline operators get regression tracking too
-    # (VERDICT r3: q102 is the most expensive query in the suite and
-    # had no tracked timing) — reported under "extended", NOT summed
-    # into the headline metric, so the baseline comparison is stable
-    extended_names = [
-        n
+    # (q102 is the suite's most expensive query, q238/q80 the pair
+    # joins, q195 a streaming drain), NOT summed into the headline. A
+    # renamed query raises KeyError here instead of dropping out.
+    extended = {
+        n: registry[n]
         for n in ("q87_contamination_screen", "q102_fuzzy_name_match",
                   "q114_embedding_normalize", "q163_semdedup",
                   "q188_packed_png_decode", "q199_hybrid_rrf_retrieval",
-                  # r13: the new production-width SimHash pair join —
-                  # tracked from birth so its band-join cost has a
-                  # per-round record (extended_total_sec grows by its
-                  # cost this round; per-query arrays keep rounds
-                  # comparable)
-                  "q238_simhash64_hamming_pairs",
-                  # r14 additions-only (VERDICT r13 items 3 and 6):
-                  # q80 so the n-gram pair family's big r13 win class
-                  # finally has a driver-side record, and one
-                  # streaming drain so the state-store sizing family
-                  # (165→47 s at the sf0.01 gate in r13) shows up in
-                  # BENCH/PERF instead of only probe logs.
-                  # extended_total_sec grows by their cost this
-                  # round; per-query pass arrays keep rounds
-                  # comparable.
-                  "q80_ngram_jaccard_pairs",
+                  "q238_simhash64_hamming_pairs", "q80_ngram_jaccard_pairs",
                   "q195_streaming_interval_join_parity")
-        if n in registry
-    ]
+    }
 
-    def run_once(q) -> float:
-        start = time.perf_counter()
-        q.fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - start, 4)
-
-    def time_phase(
-        names_to_queries: dict[str, object],
-    ) -> tuple[dict[str, float], list[float], dict[str, list[float]], list[float]]:
-        """Warm once (JVM codegen, shuffle services, Python workers,
-        parquet footer caches — the metric is steady-state execution,
-        not first-JIT), then min of 3 timed runs per query: single
-        runs at this scale are dominated by GC/scheduling noise
-        (observed 1.3s vs 7.5s for the same plan, and a 1.9× min-of-2
-        outlier for q35 in r3); the minimum is the reproducible
-        steady-state cost. Also returns the three PER-PASS totals so
-        the recorded artifact carries the host-noise spread, not just
-        a point (VERDICT r10 item 8: three consecutive rounds of
-        headline deltas were re-litigated as drift-vs-regression;
-        a spread settles it at read time). Also returns PER-QUERY
-        per-pass arrays (VERDICT r11 item 8: the per-query minima come
-        from mixed passes, so a single query's round-over-round delta
-        needs its own error bar — q188's r11 +21%-on-no-code-change
-        took a diff read to adjudicate; the pass array settles it)."""
-        for q in names_to_queries.values():
-            run_once(q)
-        timings: dict[str, float] = {}
-        pass_totals: list[float] = []
-        pass_loads: list[float] = []
-        query_passes: dict[str, list[float]] = {n: [] for n in names_to_queries}
-        for _ in range(3):
-            # host-load marker per pass (1-min loadavg BEFORE the
-            # pass): ±20% round-over-round drift adjudication gets a
-            # recorded co-variate instead of folklore (VERDICT r12
-            # item 8) — a slow pass with high loadavg is host noise,
-            # one with idle loadavg is a real regression
-            pass_loads.append(round(os.getloadavg()[0], 2))
-            # drop operator-internal caches so every timed run pays
-            # its own materialization cost (no cross-run cache flattery)
-            spark.catalog.clearCache()
-            pass_total = 0.0
-            for name, q in names_to_queries.items():
-                elapsed = run_once(q)
-                timings[name] = min(timings.get(name, elapsed), elapsed)
-                query_passes[name].append(elapsed)
-                pass_total += elapsed
-            pass_totals.append(round(pass_total, 4))
-        return timings, pass_totals, query_passes, pass_loads
+    def time_phase(queries: dict[str, object]) -> dict:
+        """Pass 0 warms (JVM codegen, shuffle services, Python workers,
+        parquet footer caches); the metric is each query's min of 3
+        timed passes, since single runs at this scale are dominated by
+        GC/scheduling noise."""
+        runs = passes(spark, queries, sf_dir, 4)
+        if failed := {n: r for n, r in runs.items() if isinstance(r, str)}:
+            raise RuntimeError(f"bench queries failed: {failed}")
+        timed = {n: r[1:] for n, r in runs.items()}
+        walls = {n: [r.wall_s for r in recs] for n, recs in timed.items()}
+        return {
+            "min": {n: min(w) for n, w in walls.items()},
+            "passes": [round(sum(w[p] for w in walls.values()), 4) for p in range(3)],
+            "query_passes": walls,
+            # the first query's record of each pass: the load before the pass
+            "loadavg": [r.loadavg_1m for r in next(iter(timed.values()))],
+            "layers": {n: min(recs, key=lambda r: r.wall_s) for n, recs in timed.items()},
+        }
 
     # Phase (a): headline, in a session that has run nothing else.
-    timings, headline_passes, query_passes, headline_loads = time_phase(bench_queries)
+    headline = time_phase(bench_queries)
     # Phase (b): extended, strictly after the headline metric is final.
-    spark.catalog.clearCache()
-    extended, extended_passes, extended_query_passes, extended_loads = time_phase(
-        {n: registry[n] for n in extended_names}
-    )
+    ext = time_phase(extended)
 
     result = {
         "metric": "headline_queries_total_sec",
-        "value": round(sum(timings.values()), 4),
+        "value": round(sum(headline["min"].values()), 4),
         "unit": "sec",
-        "queries": timings,
+        "queries": headline["min"],
         "sf": sf,
         # per-pass totals (3 timed passes over the suite): the spread
         # IS the host-noise budget; "value" stays sum of per-query
         # minimums, the round-over-round comparable
-        "headline_passes_sec": headline_passes,
+        "headline_passes_sec": headline["passes"],
         # 1-min loadavg sampled before each pass (drift co-variate)
-        "headline_pass_loadavg": headline_loads,
+        "headline_pass_loadavg": headline["loadavg"],
         # per-query per-pass timings: each query's own 3-run spread,
         # so a single query's round-over-round delta carries its
         # error bar (VERDICT r11 item 8)
-        "query_passes_sec": query_passes,
-        "extended": extended,
-        "extended_total_sec": round(sum(extended.values()), 4),
-        "extended_passes_sec": extended_passes,
-        "extended_pass_loadavg": extended_loads,
-        "extended_query_passes_sec": extended_query_passes,
+        "query_passes_sec": headline["query_passes"],
+        "extended": ext["min"],
+        "extended_total_sec": round(sum(ext["min"].values()), 4),
+        "extended_passes_sec": ext["passes"],
+        "extended_pass_loadavg": ext["loadavg"],
+        "extended_query_passes_sec": ext["query_passes"],
+        # each headline and extended query's record of its fastest pass
+        "layers": {**headline["layers"], **ext["layers"]},
     }
-    print(json.dumps(result))
-    sys.stdout.flush()
+    print(json.dumps(result, default=dataclasses.asdict), flush=True)
     spark.stop()
 
 

@@ -111,19 +111,6 @@ def plan_size_in_bytes(df: DataFrame, default: int) -> int:
         return default
 
 
-def codegen_compile_count(spark: SparkSession) -> int | None:
-    """How many generated classes this JVM has Janino-compiled so far
-    (Spark's ``CodegenMetrics`` compile-time histogram count; in
-    ``local[N]`` it covers the driver and every executor). ``None``
-    under Connect, where there is no JVM handle. A delta around a query
-    is its compile count: 0 when every class was in the codegen cache."""
-    try:
-        metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
-        return int(metrics.METRIC_COMPILATION_TIME().getCount())
-    except Exception:
-        return None
-
-
 def stamp_zip_reloads() -> None:
     """Inside a PySpark worker on CPython < 3.13, make
     ``zipimporter.invalidate_caches`` re-read an archive only when its

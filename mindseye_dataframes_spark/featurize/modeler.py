@@ -44,6 +44,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -59,6 +60,8 @@ from mindseye_dataframes_spark.featurize.strategy import (
 from mindseye_dataframes_spark.functions.hashing import seeded_unit_rms_tensor  # noqa: F401 (re-exported for strategies)
 
 LOSS_KEY = "__loss__"
+_MERGED_SCHEMA = "key string, grad array<double>, loss double, n long"
+_PARTIALS_SCHEMA = _MERGED_SCHEMA + ", part int"
 
 
 @dataclass
@@ -109,6 +112,20 @@ _LIMB_MASK = (1 << _LIMB_BITS) - 1
 MAX_MOMENT_ROWS = 1 << 39
 _LIMB_SUMS = ("l", "h", "ll0", "ll1", "hl0", "hl1", "hh0", "hh1")
 _EMPTY_GROUP = {"n": 0, "nv": 0, "kmax": None, "kcount": 0, **dict.fromkeys(_LIMB_SUMS)}
+
+
+def merge_group(key, pdf):
+    """Sum one key's per-partition partials of a gradient pass in
+    partition order, not in the order the shuffle delivered them (a
+    cluster's fetch order varies, and float addition is not
+    associative). No type hints: ``applyInPandas`` would read them."""
+    k = key[0]
+    pdf = pdf.sort_values("part", kind="stable")
+    if k == LOSS_KEY:
+        row = (k, [], float(pdf["loss"].sum()), int(pdf["n"].sum()))
+    else:
+        row = (k, np.sum(np.stack(pdf["grad"].map(np.asarray)), axis=0).tolist(), 0.0, 0)
+    return pd.DataFrame([row], columns=["key", "grad", "loss", "n"])
 
 
 def _stacked_aggregate(
@@ -635,9 +652,9 @@ class DataframeModeler:
         params_override: dict[str, np.ndarray] | None = None,
     ) -> tuple[float, dict[str, np.ndarray]]:
         """One distributed forward+backward pass: returns (mean loss,
-        gradients by param key). Per-partition partial gradients are
-        merged by a distributed groupBy-key array sum; only final
-        per-key gradients reach the driver.
+        gradients by param key). Per-partition partial gradients are merged
+        by a distributed groupBy-key array sum in partition order
+        (``merge_group``); only final per-key gradients reach the driver.
 
         ``loss_only`` skips the backward pass and gradient shuffle — the
         cheap forward probe the bisection line search runs several times
@@ -718,35 +735,20 @@ class DataframeModeler:
                     prev = acc.get(k)
                     gw = g * w
                     acc[k] = gw if prev is None else prev + gw
-            rows = [(k, v.ravel().tolist(), 0.0, 0) for k, v in acc.items()]
-            rows.append((LOSS_KEY, [], loss_sum, n_rows))
-            yield pd.DataFrame(rows, columns=["key", "grad", "loss", "n"])
+            part = TaskContext.get().partitionId()
+            rows = [(k, v.ravel().tolist(), 0.0, 0, part) for k, v in acc.items()]
+            rows.append((LOSS_KEY, [], loss_sum, n_rows, part))
+            yield pd.DataFrame(rows, columns=["key", "grad", "loss", "n", "part"])
 
         flat = self._flat_select(df, chans)
-        partials = flat.mapInPandas(
-            fwd_bwd, schema="key string, grad array<double>, loss double, n long"
-        )
+        partials = flat.mapInPandas(fwd_bwd, schema=_PARTIALS_SCHEMA)
         if loss_only:
             loss_rows = partials.select("loss", "n").toPandas()
             bc.unpersist()
             n_total = max(int(loss_rows["n"].sum()), 1)
             return (float(loss_rows["loss"].sum()) / n_total, {})
 
-        def merge_group(key, pdf):
-            k = key[0]
-            if k == LOSS_KEY:
-                return pd.DataFrame(
-                    [(k, [], float(pdf["loss"].sum()), int(pdf["n"].sum()))],
-                    columns=["key", "grad", "loss", "n"],
-                )
-            total = np.sum(np.stack(pdf["grad"].map(np.asarray)), axis=0)
-            return pd.DataFrame(
-                [(k, total.tolist(), 0.0, 0)], columns=["key", "grad", "loss", "n"]
-            )
-
-        merged = partials.groupBy("key").applyInPandas(
-            merge_group, schema="key string, grad array<double>, loss double, n long"
-        )
+        merged = partials.groupBy("key").applyInPandas(merge_group, schema=_MERGED_SCHEMA)
         loss_total, n_total = 0.0, 0
         grads: dict[str, np.ndarray] = {}
         params = eval_params

@@ -10,10 +10,8 @@ from __future__ import annotations
 
 import datetime
 import decimal
-import hashlib
 import math
 import os
-import re
 
 import duckdb
 
@@ -282,31 +280,6 @@ def formatted_plan(df) -> str:
             )
         )
     )
-
-
-# Numbers a re-run of the same plan may renumber: lambda variables
-# (PySpark numbers their names per process), expression ids (``#123``),
-# exchange plan ids, whole-stage codegen ids and AQE query-stage ids
-# (stages are created as earlier ones finish).
-_PLAN_IDS = re.compile(r"lambda \w+#\d+|#\d+|plan_id=\d+|codegen id : \d+")
-_STAGE_IDS = re.compile(r"(QueryStage\n(?:Output .*\n)?Arguments: )\d+")
-
-
-def last_plan_description(spark) -> str:
-    """The status store's ``physicalPlanDescription`` of the session's
-    latest SQL execution: formatted, with AQE's final plan once the
-    execution ends."""
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    store = spark._jsparkSession.sharedState().statusStore()
-    return store.executionsList(store.executionsCount() - 1, 1).apply(0).physicalPlanDescription()
-
-
-def last_plan_fingerprint(spark) -> str:
-    """A short hash of ``last_plan_description`` with run-local ids
-    masked. Two runs with the same fingerprint executed the same
-    physical plan."""
-    masked = _STAGE_IDS.sub(r"\1#", _PLAN_IDS.sub("#", last_plan_description(spark)))
-    return hashlib.sha256(masked.encode()).hexdigest()[:12]
 
 
 COVTYPE_LABELS = 7

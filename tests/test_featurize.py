@@ -22,7 +22,7 @@ from mindseye_dataframes_spark.functions.hashing import (
     name_uuid,
     seeded_unit_rms_tensor,
 )
-from tests.helpers import last_plan_description
+from mindseye_dataframes_spark.measure import last_plan_description, record
 
 
 def test_name_uuid_matches_java_scheme():
@@ -174,14 +174,12 @@ def test_missing_label_fails_before_any_spark_job(spark):
     key discovery (or any other Spark job)."""
     df = spark.createDataFrame([(1.0, "X")], "x double, label string")
     modeler = DataframeModeler(ModelingStrategy(default_size=4))
-    sc = spark.sparkContext
-    sc.setJobGroup("missing-label", "fit with a misspelled label")
-    try:
+
+    def fit():
         with pytest.raises(ValueError, match=r"'lable'.*\['x', 'label'\]"):
             modeler.fit(df, mlp("m", 4, [], 2), "lable")
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert sc.statusTracker().getJobIdsForGroup("missing-label") == []
+
+    assert record(spark, fit).jobs == 0
     assert not modeler.context.representations and not modeler.context.stats
     with pytest.raises(ValueError, match="'lable'"):
         modeler.eval_to_dataframe(df, "f", label_col="lable")
@@ -435,21 +433,6 @@ def test_init_keys_rejects_values_outside_exact_moment_range(spark, ansi, big):
         _numeric_stats(spark, [1.0, 2.0, 3.0, big])
 
 
-_JOB_GROUPS = itertools.count()
-
-
-def _job_count(spark, action) -> int:
-    """The Spark jobs ``action()`` runs, counted by a fresh job group."""
-    group = f"job-count-{next(_JOB_GROUPS)}"
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_init_keys_runs_one_aggregate_query(spark, ansi):
     """The moments, the vector dimension and the one-hot label need the
     jobs of one bare aggregate: the label's keys are enumerated, not
@@ -459,9 +442,9 @@ def test_init_keys_runs_one_aggregate_query(spark, ansi):
         F.array(F.col("id").cast("double"), F.lit(1.0)).alias("emb"),
         (F.col("id") % 3 + 1).cast("int").alias("label"),
     )
-    bare = _job_count(spark, lambda: df.agg(F.count("*")).collect())
+    bare = record(spark, lambda: df.agg(F.count("*")).collect()).jobs
     modeler = DataframeModeler(CategorizingStrategy("label", categories=3, base=1, default_size=4))
-    jobs = _job_count(spark, lambda: modeler.init_keys(df, "label"))
+    jobs = record(spark, lambda: modeler.init_keys(df, "label")).jobs
     assert jobs == bare > 0
     ctx = modeler.context
     assert set(ctx.representations) == ctx.frozen == {"label=1", "label=2", "label=3"}
@@ -594,7 +577,7 @@ def test_unencodable_label_raises_from_the_aggregate(spark, ansi, dtype, values,
     ValueError naming the column, counted inside the moments aggregate
     (no job of its own) and before the context is touched."""
     df = spark.createDataFrame([(float(i), v) for i, v in enumerate(values)], f"x double, label {dtype}")
-    bare = _job_count(spark, lambda: df.agg(F.count("*")).collect())
+    bare = record(spark, lambda: df.agg(F.count("*")).collect()).jobs
     strategy = CategorizingStrategy("label", categories=2, value_index=value_index, default_size=4)
     modeler = DataframeModeler(strategy)
 
@@ -602,7 +585,7 @@ def test_unencodable_label_raises_from_the_aggregate(spark, ansi, dtype, values,
         with pytest.raises(ValueError, match=message):
             modeler.init_keys(df, "label")
 
-    assert _job_count(spark, init) == bare
+    assert record(spark, init).jobs == bare
     assert not modeler.context.representations and not modeler.context.stats
 
 
@@ -687,9 +670,9 @@ def test_loss_only_eval_is_one_job_and_matches_the_merged_loss(spark, monkeypatc
         return partials[-1]
 
     monkeypatch.setattr(frame, "mapInPandas", spy)
-    bare = _job_count(spark, df.collect)
+    bare = record(spark, df.collect).jobs
     result = []
-    jobs = _job_count(spark, lambda: result.append(modeler.eval(df, net, "label", loss_only=True)))
+    jobs = record(spark, lambda: result.append(modeler.eval(df, net, "label", loss_only=True))).jobs
     assert jobs == bare > 0
     loss, grads = result[0]
     assert grads == {}
@@ -702,3 +685,33 @@ def test_loss_only_eval_is_one_job_and_matches_the_merged_loss(spark, monkeypatc
     (ref,) = partials[0].groupBy("key").applyInPandas(merge, "key string, loss double, n long").collect()
     assert ref["n"] == len(rows)
     assert loss == ref["loss"] / ref["n"]
+
+
+def test_gradient_merge_sums_partials_in_partition_order():
+    """A key's partials reach the merge in the order the shuffle fetched
+    them, which a cluster does not fix. ``merge_group`` sums them in
+    partition order whatever the arrival order, bit for bit. In the
+    other orders these partials sum to something else: (1e16 + 1.0) -
+    1e16 is 0.0, but (1e16 - 1e16) + 1.0 is 1.0."""
+    import pandas as pd
+
+    grads = [[1e16, 1.0], [1.0, 1e16], [-1e16, -1e16]]  # partitions 0, 1, 2
+    losses = [1e16, 1.0, -1e16]
+    folds = {tuple(sum((grads[p] for p in o), start=np.zeros(2))) for o in itertools.permutations(range(3))}
+    assert len(folds) > 1  # the partials are order-sensitive
+    want_grad = np.add(np.add(grads[0], grads[1]), grads[2])
+    want_loss = (losses[0] + losses[1]) + losses[2]
+    for order in itertools.permutations(range(3)):
+        pdf = pd.DataFrame(
+            {
+                "key": ["w"] * 3,
+                "grad": [grads[p] for p in order],
+                "loss": [losses[p] for p in order],
+                "n": [1] * 3,
+                "part": list(order),
+            }
+        )
+        (row,) = modeler_module.merge_group(("w",), pdf).itertuples()
+        assert np.asarray(row.grad).tobytes() == want_grad.tobytes(), order
+        (row,) = modeler_module.merge_group((modeler_module.LOSS_KEY,), pdf).itertuples()
+        assert (row.loss, row.n) == (want_loss, 3), order

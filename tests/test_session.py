@@ -7,10 +7,9 @@ import sys
 
 import pytest
 
-from mindseye_dataframes_spark.compat import codegen_compile_count
+from mindseye_dataframes_spark.measure import passes
 from mindseye_dataframes_spark.queries import load_all
 from mindseye_dataframes_spark.session import CODEGEN_CACHE_MAX_ENTRIES
-from tests.helpers import last_plan_fingerprint
 
 
 def test_warm_headline_pass_compiles_nothing(spark, sf_dir):
@@ -28,19 +27,13 @@ def test_warm_headline_pass_compiles_nothing(spark, sf_dir):
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
         CODEGEN_CACHE_MAX_ENTRIES
     )
-    headline = [q for _, q in sorted(load_all().items()) if q.bench]
+    headline = {n: q for n, q in sorted(load_all().items()) if q.bench}
     assert len(headline) == 8
     gate_sf_dir = os.path.join(os.path.dirname(sf_dir), "sf0.01")
 
-    compiled = {q.name: [] for q in headline}
-    plans = {q.name: set() for q in headline}
-    for _ in range(3):
-        spark.catalog.clearCache()
-        for q in headline:
-            before = codegen_compile_count(spark)
-            q.fn(spark, gate_sf_dir).write.format("noop").mode("overwrite").save()
-            compiled[q.name].append(codegen_compile_count(spark) - before)
-            plans[q.name].add(last_plan_fingerprint(spark))
+    runs = passes(spark, headline, gate_sf_dir, 3)
+    compiled = {n: [r.codegen_compiles for r in recs] for n, recs in runs.items()}
+    plans = {n: {r.plan for r in recs} for n, recs in runs.items()}
     assert not any(any(c[1:]) for c in compiled.values()), f"compiles per pass: {compiled}"
     assert all(len(p) == 1 for p in plans.values()), f"plan fingerprints: {plans}"
 

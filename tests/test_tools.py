@@ -1,17 +1,20 @@
 """The command-line tools under ``tools/``: every name they import
-from the package or the test helpers exists, and the timing loop
-shared by ``time_probe`` records failures and keeps going."""
+from the package or the test helpers exists, and every probe log kept
+under ``docs/probes/`` is cited by a tracked file outside it."""
 
 from __future__ import annotations
 
 import ast
+import fnmatch
 import importlib
 import os
-import sys
+import re
+import subprocess
 
 import pytest
 
-TOOLS = os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+TOOLS = os.path.join(REPO, "tools")
 
 
 @pytest.mark.parametrize(
@@ -35,23 +38,46 @@ def test_tool_imports_resolve(tool):
             )
 
 
-def test_time_queries_records_failure_and_times_the_rest(spark):
-    sys.path.insert(0, TOOLS)
-    from time_probe import time_queries
+# a file name or glob ending in a log extension, or anything after
+# ``docs/probes/``; ``{a,b}`` lists expand, ``*`` matches
+_CITATION = re.compile(r"docs/probes/[\w.{},*\-]+|[\w.{},*\-]*\w[\w.{},*\-]*\.(?:json|log)\b")
 
-    from mindseye_dataframes_spark.queries.registry import Query
 
-    def boom(spark, sf_dir):
-        raise ValueError(f"no table under {sf_dir}")
+def _expand_braces(pattern: str) -> list[str]:
+    m = re.search(r"\{([^{}]*)\}", pattern)
+    if not m:
+        return [pattern]
+    return [
+        out
+        for alt in m.group(1).split(",")
+        for out in _expand_braces(pattern[: m.start()] + alt + pattern[m.end() :])
+    ]
 
-    queries = {
-        "q_fail": Query("q_fail", boom),
-        "q_ok": Query("q_ok", lambda spark, sf_dir: spark.range(10)),
-    }
-    results = time_queries(spark, queries, "sf-missing", 2)
-    assert results["q_fail"] == "FAIL no table under sf-missing"
-    ok = results["q_ok"]
-    assert len(ok["runs"]) == 2
-    assert ok["cold"] == ok["runs"][0] and ok["warm_min"] == ok["runs"][1]
-    # the second run finds its one generated class in the codegen cache
-    assert len(ok["codegen_compiles"]) == 2 and ok["codegen_compiles"][1] == 0
+
+def test_every_tracked_probe_log_is_cited():
+    """A log under ``docs/probes/`` is tracked only as evidence that a
+    tracked file outside it names, by file name (with or without its
+    extension) or by a glob or brace list such as
+    ``sweep_sf1_{0_31,31_48}.json``. The tools write new logs to the
+    git-ignored ``benchdata/probes/``."""
+    tracked = subprocess.run(
+        ["git", "ls-files"], cwd=REPO, capture_output=True, text=True, check=True
+    ).stdout.split()
+    probes = {os.path.basename(f) for f in tracked if f.startswith("docs/probes/")}
+    cited = set()
+    for f in tracked:
+        if f.startswith("docs/probes/"):
+            continue
+        try:
+            with open(os.path.join(REPO, f), encoding="utf-8") as fh:
+                text = fh.read()
+        except (OSError, UnicodeDecodeError):
+            continue
+        for token in set(_CITATION.findall(text)):
+            for pattern in _expand_braces(token.removeprefix("docs/probes/")):
+                cited.update(
+                    n for n in probes
+                    if fnmatch.fnmatchcase(n, pattern)
+                    or fnmatch.fnmatchcase(os.path.splitext(n)[0], pattern)
+                )
+    assert not probes - cited, f"uncited probe logs: {sorted(probes - cited)}"

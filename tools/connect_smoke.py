@@ -1,5 +1,6 @@
 """Spark Connect smoke: run one query per compat-shim call-site family
-under a REAL Connect session and record a probe JSON.
+under a REAL Connect session (one ``measure.passes`` pass: wall time
+only) and write benchdata/probes/connect_smoke_run.json.
 
 This container cannot run it (no grpcio, installs prohibited — see
 docs/probes/connect_smoke.json for the captured failure evidence); on
@@ -19,9 +20,7 @@ The subset covers every compat routing the shim claims to handle:
 
 from __future__ import annotations
 
-import json
 import sys
-import time
 
 SUBSET = (
     "q13_zip_positional",
@@ -41,25 +40,11 @@ def main() -> None:
     # prove this is genuinely Connect, not a local fallback
     is_connect = type(spark).__module__.startswith("pyspark.sql.connect")
 
+    from mindseye_dataframes_spark.measure import passes, write
     from mindseye_dataframes_spark.queries import load_all
 
     registry = load_all()
-    results = {}
-    for name in SUBSET:
-        t0 = time.perf_counter()
-        try:
-            n = registry[name].fn(spark, sf_dir).count()
-            results[name] = {
-                "rows": n,
-                "sec": round(time.perf_counter() - t0, 3),
-                "err": None,
-            }
-        except Exception as exc:  # record, keep probing the rest
-            results[name] = {
-                "rows": None,
-                "sec": round(time.perf_counter() - t0, 3),
-                "err": f"{type(exc).__name__}: {str(exc)[:300]}",
-            }
+    results = passes(spark, {n: registry[n] for n in SUBSET}, sf_dir, 1)
 
     probe = {
         "probe": "spark-connect smoke",
@@ -67,12 +52,9 @@ def main() -> None:
         "sf_dir": sf_dir,
         "session_is_connect": is_connect,
         "results": results,
-        "ok": is_connect and all(r["err"] is None for r in results.values()),
+        "ok": is_connect and not any(isinstance(r, str) for r in results.values()),
     }
-    out = "docs/probes/connect_smoke_run.json"
-    with open(out, "w", encoding="utf-8") as fh:
-        json.dump(probe, fh, indent=2)
-    print(json.dumps(probe))
+    print("WROTE", write("connect_smoke_run", probe))
 
 
 if __name__ == "__main__":

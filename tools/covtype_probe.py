@@ -17,8 +17,8 @@ published model is ``midLayers = List(200, 200)`` (`Trainer.scala:70`)
 — run ``python tools/covtype_probe.py 200,200`` for that shape
 (VERDICT r7 item 3: the gradient merge and parameter broadcast are
 ~100x the [20] probe's, which is the training claim worth proving).
-Results accumulate in docs/probes/covtype_probe.json under
-``probes["mid_<shape>"]`` so the shapes sit side by side; exits
+Each epoch's fit is one ``measure.record`` (wall, jobs, task CPU); the
+log goes to benchdata/probes/covtype_probe_mid_<shape>.json. Exits
 non-zero unless the epoch-end loss strictly decreases over at least 3
 epoch transitions.
 """
@@ -28,7 +28,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 N_ROWS = 581_012  # CovType_Trainer.scala:24
 N_SOIL = 40
@@ -46,6 +45,7 @@ def main() -> None:
         DataframeModeler,
     )
     from mindseye_dataframes_spark.featurize.layers import mlp
+    from mindseye_dataframes_spark.measure import record, write
     from mindseye_dataframes_spark.sources.staging import stage
     from tests.helpers import COVTYPE_LABELS as LABELS
     from tests.helpers import covtype_raw, covtype_staging_view
@@ -76,10 +76,9 @@ def main() -> None:
     print(f"mid_layers={mid_layers}", flush=True)
 
     epochs = []
-    t_total = time.time()
     for i, frac in enumerate(FRACTIONS):
-        t0 = time.time()
-        losses = modeler.fit(
+        losses = []
+        rec = record(spark, lambda: losses.extend(modeler.fit(
             staged,
             net,
             "Cover_Type",
@@ -88,7 +87,7 @@ def main() -> None:
             lr=0.3,
             seed=5 + i,
             max_probes=max_probes,
-        )
+        )))
         epochs.append(
             {
                 "epoch": i,
@@ -98,7 +97,9 @@ def main() -> None:
                 "loss_first": round(losses[0], 5),
                 "loss_last": round(losses[-1], 5),
                 "probes": list(modeler.probe_history),
-                "wall_sec": round(time.time() - t0, 1),
+                "wall_sec": rec.wall_s,
+                "jobs": rec.jobs,
+                "task_cpu_s": rec.task_cpu_s,
             }
         )
         print(json.dumps(epochs[-1]), flush=True)
@@ -115,19 +116,9 @@ def main() -> None:
         "epochs": epochs,
         "epoch_end_losses": ends,
         "strict_decreases": decreases,
-        "total_wall_sec": round(time.time() - t_total, 1),
+        "total_wall_sec": round(sum(e["wall_sec"] for e in epochs), 4),
     }
-    path = os.path.join(repo, "docs", "probes", "covtype_probe.json")
-    # accumulate shapes side by side
-    doc: dict = {"probes": {}}
-    try:
-        with open(path) as fh:
-            doc = json.load(fh)
-    except (OSError, ValueError):
-        pass
-    doc["probes"][f"mid_{'x'.join(str(m) for m in mid_layers)}"] = out
-    with open(path, "w") as fh:
-        json.dump(doc, fh, indent=1)
+    path = write(f"covtype_probe_mid_{'x'.join(str(m) for m in mid_layers)}", out)
     print("WROTE", path, flush=True)
     ok = decreases >= 3 and ends[-1] < ends[0]
     print("DECREASING" if ok else "NOT-DECREASING", ends, flush=True)

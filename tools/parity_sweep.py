@@ -12,11 +12,11 @@ path (operators/pq.py:pq_topk_rerank). Round 6's sf1 probe of q101
 caught regr_slope accumulation-order drift (fixed b04fb97).
 
 Every run writes an AUDITABLE JSON log (--log, default
-docs/probes/sweep_<sfname>_<lo>_<hi>.json) recording the
+benchdata/probes/sweep_<sfname>_<lo>_<hi>[_only-...].json) recording the
 sf dir, the chunk bounds, the EXACT skip set and which queries it
-suppressed, per-query status + wall seconds, and the final fail
-list — so "all pass at sfX" is checkable after the fact, including
-what was NOT checked (VERDICT r6 watch item).
+suppressed, per-query status + wall seconds (a ``measure.record``
+each), and the final fail list — so "all pass at sfX" is checkable
+after the fact, including what was NOT checked (VERDICT r6 watch item).
 
 Usage (run FROM THE REPO ROOT, or export PYTHONPATH=<repo> — Python
 workers resolve module imports through PYTHONPATH/cwd, not the
@@ -42,10 +42,8 @@ CI step timeout; prints one line per query and a final FAILS list.
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
-import time
 
 # Spark SQL types whose string rendering inside the checksum digest
 # (concat_ws) is engine-stable vs DuckDB — the only types a
@@ -116,7 +114,7 @@ def main() -> None:
     ap.add_argument(
         "--log",
         default="",
-        help="JSON log path (default docs/probes/"
+        help="JSON log path (default benchdata/probes/"
         "sweep_<sfname>_<lo>_<hi>.json under the repo root)",
     )
     ap.add_argument(
@@ -158,6 +156,7 @@ def main() -> None:
 
     spark = make_session()
     import __spark_entry__ as e
+    from mindseye_dataframes_spark.measure import record, write
     from mindseye_dataframes_spark.queries import load_all
     from tests.helpers import assert_matches_oracle
 
@@ -172,35 +171,41 @@ def main() -> None:
         names = [n for n in names if any(n.startswith(o) for o in only)]
 
     fails, skipped, results = [], [], {}
-    t_start = time.time()
     for name in names:
         if any(name.startswith(s) for s in skip):
             print(f"{name} skipped", flush=True)
             skipped.append(name)
             results[name] = {"status": "skipped", "sec": 0.0}
             continue
-        t0 = time.time()
-        try:
-            if name in osql:
-                df = qs[name](spark, args.sf_dir)
-                spec = bounded.get(name)
-                if spec is None and args.guard_rows > 0:
-                    spec = derived_guard_spec(
-                        df, args.guard_rows, name=name
+        status = []
+
+        def run(name=name, status=status):
+            try:
+                if name in osql:
+                    df = qs[name](spark, args.sf_dir)
+                    spec = bounded.get(name)
+                    if spec is None and args.guard_rows > 0:
+                        spec = derived_guard_spec(
+                            df, args.guard_rows, name=name
+                        )
+                    mode = assert_matches_oracle(
+                        df, osql[name], args.sf_dir, name=name, bounded=spec,
                     )
-                mode = assert_matches_oracle(
-                    df, osql[name], args.sf_dir, name=name, bounded=spec,
-                )
-                # "ok-bounded" marks rows verified by engine-side
-                # aggregate checksums (result too large to collect) so
-                # the artifact records which evidence form each green
-                # row carries
-                status = "ok" if mode == "exact" else f"ok-{mode}"
-            else:
-                assert qs[name](spark, args.sf_dir).count() >= 0
-                status = "rows-only-ok"
-        except Exception as ex:  # noqa: BLE001 — report, keep sweeping
-            status = f"FAIL {repr(ex)[:300]}"
+                    # "ok-bounded" marks rows verified by engine-side
+                    # aggregate checksums (result too large to collect) so
+                    # the artifact records which evidence form each green
+                    # row carries
+                    status.append("ok" if mode == "exact" else f"ok-{mode}")
+                else:
+                    assert qs[name](spark, args.sf_dir).count() >= 0
+                    status.append("rows-only-ok")
+            except Exception as ex:  # noqa: BLE001 — report, keep sweeping
+                status.append(f"FAIL {repr(ex)[:300]}")
+
+        sec = record(spark, run).wall_s
+        results[name] = {"status": status[0], "sec": sec}
+        print(f"{name} {status[0]} {sec}s", flush=True)
+        if status[0].startswith("FAIL"):
             fails.append(name)
             # a heavy failure (maxResultSize kill, executor GC death)
             # POISONS the local-mode session for every later query in
@@ -212,9 +217,6 @@ def main() -> None:
                 pass
             spark = make_session()
             print(f"  [session restarted after {name}]", flush=True)
-        sec = round(time.time() - t0, 1)
-        results[name] = {"status": status, "sec": sec}
-        print(f"{name} {status} {sec}s", flush=True)
         # query-path persists (doc features, gram counts, fingerprint
         # relations, ...) are lazy and can't be unpersisted inside the
         # query builders — drop them between queries so a long sweep
@@ -226,41 +228,25 @@ def main() -> None:
         except Exception:
             pass
 
-    log_path = args.log
-    if not log_path:
-        sfname = os.path.basename(args.sf_dir.rstrip("/"))
-        hi_tag = "end" if args.hi >= 10**9 else str(args.hi)
-        only_tag = ("_only-" + "-".join(only)) if only else ""
-        if len(only_tag) > 80:  # a long --only list overflows NAME_MAX
-            import hashlib
-
-            digest = hashlib.md5("-".join(only).encode()).hexdigest()[:10]
-            only_tag = f"_only-{len(only)}q-{digest}"
-        log_path = os.path.join(
-            repo,
-            "docs",
-            "probes",
-            f"sweep_{sfname}_{args.lo}_{hi_tag}{only_tag}.json",
-        )
-    os.makedirs(os.path.dirname(log_path), exist_ok=True)
-    with open(log_path, "w") as fh:
-        json.dump(
-            {
-                "sf_dir": args.sf_dir,
-                "chunk": [args.lo, args.hi],
-                "only": list(only),
-                "skip_prefixes": list(skip),
-                "skipped_queries": skipped,
-                "n_run": len(names) - len(skipped),
-                "n_fail": len(fails),
-                "fails": fails,
-                "total_sec": round(time.time() - t_start, 1),
-                "results": results,
-            },
-            fh,
-            indent=1,
-            sort_keys=True,
-        )
+    sfname = os.path.basename(args.sf_dir.rstrip("/"))
+    hi_tag = "end" if args.hi >= 10**9 else str(args.hi)
+    only_tag = ("_only-" + "-".join(only)) if only else ""
+    log_path = write(
+        f"sweep_{sfname}_{args.lo}_{hi_tag}{only_tag}",
+        {
+            "sf_dir": args.sf_dir,
+            "chunk": [args.lo, args.hi],
+            "only": list(only),
+            "skip_prefixes": list(skip),
+            "skipped_queries": skipped,
+            "n_run": len(names) - len(skipped),
+            "n_fail": len(fails),
+            "fails": fails,
+            "total_sec": round(sum(r["sec"] for r in results.values()), 1),
+            "results": results,
+        },
+        args.log or None,
+    )
     print("LOG", log_path, flush=True)
     print("CHUNK", args.lo, args.hi, "FAILS", fails, flush=True)
     sys.exit(1 if fails else 0)

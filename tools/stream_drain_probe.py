@@ -19,12 +19,12 @@ Each timed result is also sanity-checked (rollup rows / probe rows
 non-empty) so a probe can't go green on a short-circuited run.
 
 Statistical protocol (VERDICT r10 item 3 — the r10 sf1 numbers spanned
-a ±2× band, useless as a regression tracker): one UNTIMED warm-up run
+a ±2× band, useless as a regression tracker): UNTIMED warm-up runs
 per family first (the r10 spread's worst outliers were cold JVM/
 codegen/state-store initialization on run 1), then median-of-N
-(default 5) with the full run list and the max/min spread ratio
-recorded; a jvm System.gc() plus an untimed 8 s settle between runs
-(with the state-store maintenance interval shortened to 5 s) lets
+(default 5) with min and quartiles (``measure.spread``) and every
+run's ``measure.Record``; a jvm System.gc() plus an untimed 8 s settle
+between runs (with the state-store maintenance interval shortened to 5 s) lets
 finished queries' state providers unload before the next run starts —
 without it the sf1 series CLIMBED 18→49 s run-over-run as provider
 heap from completed drains billed their successors. Trigger count is
@@ -32,18 +32,21 @@ already pinned by the staged layout (32 aged files + 1 sentinel at
 maxFilesPerTrigger=8 → 5 triggers, every run).
 
 Usage:  python tools/stream_drain_probe.py [sf_dir] [n_runs]
-Writes docs/probes/stream_drain_<sfname>.json.
+Writes benchdata/probes/stream_drain_<sfname>.json (git-ignored).
 """
 
 from __future__ import annotations
 
 import itertools
-import json
 import os
 import shutil
-import statistics
 import sys
 import time
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+
+from mindseye_dataframes_spark.measure import record, spread, write  # noqa: E402
 
 # untimed settle between runs: one state-store maintenance cycle
 SETTLE_SEC = 8.0
@@ -69,7 +72,7 @@ def _drop_probe_views(spark, prefix: str) -> None:
         pass
 
 
-def _warm_to_steady(run, *, max_warm: int = 6, tol: float = 0.10):
+def _warm_to_steady(spark, run, *, max_warm: int = 6, tol: float = 0.10):
     """Run untimed warm-ups until two consecutive runs agree within
     ``tol`` (or ``max_warm`` runs) — a single warm-up is not enough
     for the stateful-join drain, whose generated code keeps getting
@@ -81,9 +84,7 @@ def _warm_to_steady(run, *, max_warm: int = 6, tol: float = 0.10):
     warm = []
     prev = None
     for _ in range(max_warm):
-        t0 = time.monotonic()
-        run()
-        t = round(time.monotonic() - t0, 2)
+        t = record(spark, run).wall_s
         warm.append(t)
         if prev is not None and abs(t - prev) / max(prev, 0.01) < tol:
             break
@@ -91,47 +92,28 @@ def _warm_to_steady(run, *, max_warm: int = 6, tol: float = 0.10):
     return warm
 
 
-def _time_family(spark, kind, stage, run, n_runs):
+def _time_family(spark, stage, run, n_runs):
     """Stage once, warm ``run`` to steady, then time it ``n_runs``
     times, each after a JVM GC and an untimed settle so every timed run
     starts from the same unloaded-provider state. ``run`` takes a tag
-    that is unique per call. The record keeps the median, the min and
-    two spread measures: max/min (brittle — one co-tenant burst moves
-    it) and the IQR ratio p75/p25 (robust for n=5; the
-    regression-tracking band), so the artifact shows whether an
-    outlier or the distribution moved."""
-    t0 = time.monotonic()
-    stage()
-    t_stage = round(time.monotonic() - t0, 2)
+    that is unique per call. The result keeps the staging record, the
+    warm-up times, the spread of the timed runs (the IQR is the
+    regression-tracking band) and their records."""
+    staged = record(spark, stage)
     warm_tags = (f"w{i}" for i in itertools.count())
-    warm = _warm_to_steady(lambda: run(next(warm_tags)))
+    warm = _warm_to_steady(spark, lambda: run(next(warm_tags)))
     runs = []
     for i in range(n_runs):
         _jvm_gc(spark)
         time.sleep(SETTLE_SEC)
-        t0 = time.monotonic()
-        run(f"probe{i}")
-        runs.append(round(time.monotonic() - t0, 2))
-    s = sorted(runs)
-    p25 = s[max(0, int(round(0.25 * (len(s) - 1))))]
-    p75 = s[min(len(s) - 1, int(round(0.75 * (len(s) - 1))))]
-    record = {
-        "stage_once": t_stage,
-        "warmup_runs": warm,
-        f"{kind}_median": round(statistics.median(s), 2),
-        f"{kind}_min": s[0],
-        "spread_max_over_min": round(s[-1] / s[0], 2),
-        "iqr_ratio_p75_over_p25": round(p75 / p25, 2),
-        "runs": runs,
-    }
-    print(kind, record, flush=True)
-    return record
+        runs.append(record(spark, lambda: run(f"probe{i}")))
+    walls = spread([r.wall_s for r in runs])
+    print(walls, flush=True)
+    return {"stage_once": staged, "warmup_runs": warm, **walls, "runs": runs}
 
 
 def main() -> None:
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, repo)
-    os.chdir(repo)
+    os.chdir(REPO)
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_runs = int(sys.argv[2]) if len(sys.argv) > 2 else 5
 
@@ -167,7 +149,7 @@ def main() -> None:
 
     try:
         out["results"]["q228_drain"] = _time_family(
-            spark, "drain", lambda: oj_stage(spark, sf_dir, src), drain, n_runs
+            spark, lambda: oj_stage(spark, sf_dir, src), drain, n_runs
         )
     finally:
         shutil.rmtree(src, ignore_errors=True)
@@ -182,17 +164,13 @@ def main() -> None:
 
     try:
         out["results"]["q218_fold"] = _time_family(
-            spark, "fold", lambda: ann_ckpt_stage_log(spark, sf_dir, post_log),
-            fold, n_runs,
+            spark, lambda: ann_ckpt_stage_log(spark, sf_dir, post_log), fold, n_runs
         )
     finally:
         shutil.rmtree(root, ignore_errors=True)
 
     sfname = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(repo, "docs", "probes", f"stream_drain_{sfname}.json")
-    with open(path, "w") as fh:
-        json.dump(out, fh, indent=1)
-    print("WROTE", path, flush=True)
+    print("WROTE", write(f"stream_drain_{sfname}", out), flush=True)
     spark.stop()
 
 
