@@ -23,6 +23,13 @@ Rebuild of the reference's core (`DataframeModeler.scala`,
 - **Batch inference** ``eval_to_dataframe`` (M1,
   `ModelingStrategy.scala:167-186`): broadcast params → Arrow-batched
   ``mapInPandas`` forward → ``name: array<double>`` column.
+- **Executor kernels** (`DataframeModeler.scala:68-119,192-211`): the
+  kernel encodes each categorical column once per batch (``_encode``:
+  codes into its distinct values) and looks each distinct value's
+  parameter row up once (``_value_table``). The forward pass gathers
+  ``table[codes]``, the backward pass scatter-adds the rows' gradients
+  with ``np.add.at`` in row order, and the label target is the same
+  gather.
 - **Distributed gradients** ``eval`` (M2,
   `ModelingStrategy.scala:188-236`): per-partition forward+backward
   emits (key, grad) rows; the merge is a *distributed* groupBy-key
@@ -57,7 +64,7 @@ from mindseye_dataframes_spark.featurize.strategy import (
     ModelingStrategy,
     PathBucketedOverlay,
 )
-from mindseye_dataframes_spark.functions.hashing import seeded_unit_rms_tensor  # noqa: F401 (re-exported for strategies)
+from mindseye_dataframes_spark.functions.hashing import seeded_unit_rms_tensor
 
 LOSS_KEY = "__loss__"
 _MERGED_SCHEMA = "key string, grad array<double>, loss double, n long"
@@ -72,24 +79,39 @@ class Channel:
     dtype: str = "string"  # spark simpleString of the source column
 
 
-def _render_values(col: pd.Series, dtype: str) -> list:
-    """Render a pandas column the way Spark's CAST(x AS STRING) does,
-    so executor-side parameter keys match driver-discovered keys:
-    booleans are 'true'/'false' (pandas str() gives 'True'), integer
-    columns that arrived as float64 via Arrow null-handling render
-    without the '.0', and nulls stay None (null categorical values
-    contribute a zero vector, never a 'nan' key)."""
-    out = []
-    for v in col:
-        if v is None or (isinstance(v, float) and np.isnan(v)) or v is pd.NA:
-            out.append(None)
-        elif dtype == "boolean":
-            out.append("true" if v else "false")
-        elif dtype in INT_DTYPES:
-            out.append(str(int(v)))
-        else:
-            out.append(str(v))
-    return out
+def _encode(col: pd.Series, dtype: str) -> tuple[np.ndarray, list[str]]:
+    """A batch column as ``(codes, values)``: ``values`` are its distinct
+    values in order of first appearance, rendered the way Spark's
+    CAST(x AS STRING) does so executor keys match the keys init_keys
+    found: booleans are 'true'/'false', integer columns that arrived as
+    float64 (Arrow's NULL handling) lose the '.0'. Row i holds
+    ``values[codes[i]]``; NULL and NaN rows hold code -1. Only the
+    distinct values are rendered, and raw values that render alike
+    (0.0 and -0.0) share one code."""
+    codes, uniques = pd.factorize(col)
+    if dtype == "boolean":
+        rendered = ["true" if u else "false" for u in uniques]
+    elif dtype in INT_DTYPES:
+        rendered = [str(int(u)) for u in uniques]
+    else:
+        rendered = [str(u) for u in uniques]
+    merged, values = pd.factorize(np.array(rendered, dtype=object))
+    return np.append(merged, -1)[codes], values.tolist()
+
+
+def _value_table(
+    path: str, values: list[str], params: dict[str, np.ndarray], strat: ModelingStrategy, width: int
+) -> np.ndarray:
+    """The parameter row of each distinct value of a categorical path
+    (the key's representation, or its deterministic initial one when
+    the context lacks it), then a zero row for code -1: a NULL value
+    contributes nothing."""
+    table = np.zeros((len(values) + 1, width))
+    for i, v in enumerate(values):
+        key = strat.key_for(path, v)
+        vec = params.get(key)
+        table[i] = strat.initial_representation(key) if vec is None else vec
+    return table
 
 
 def _label_channel(chans: list[Channel], label_col: str) -> Channel:
@@ -199,11 +221,6 @@ def _exact_sums(group) -> tuple[int, int]:
     return sv, sq
 
 
-class DictionaryOverflowError(RuntimeError):
-    """A categorical path's distinct-value dictionary exceeds the
-    configured driver cap and on_dictionary_overflow='error'."""
-
-
 class DataframeModeler:
     """Facade mirroring `DataframeModeler.scala:48-50`."""
 
@@ -213,25 +230,17 @@ class DataframeModeler:
         context: ModelContext | None = None,
         root: str = "",
         max_dictionary_keys: int = 100_000,
-        on_dictionary_overflow: str = "auto_bucket",
         overflow_buckets: int = 1 << 16,
     ):
-        if on_dictionary_overflow not in ("auto_bucket", "error"):
-            raise ValueError(
-                "on_dictionary_overflow must be 'auto_bucket' or 'error', "
-                f"got {on_dictionary_overflow!r}"
-            )
         self.strategy = strategy
         self.context = context or ModelContext()
         self.root = root
         # Guard for the init_keys dictionary collect (the reference
         # collects distinct values unconditionally,
         # `DataframeModeler.scala:163-178` — a driver OOM at 100 TB
-        # cardinalities). Above the cap, the offending paths either
-        # auto-switch to hashed-bucket embeddings (PathBucketedOverlay)
-        # or raise DictionaryOverflowError, per on_dictionary_overflow.
+        # cardinalities). Above the cap, the offending paths switch to
+        # hashed-bucket embeddings (PathBucketedOverlay).
         self.max_dictionary_keys = max_dictionary_keys
-        self.on_dictionary_overflow = on_dictionary_overflow
         self.overflow_buckets = overflow_buckets
         # broadcasts created by eval_to_dataframe stay alive while the
         # (lazy) result DataFrame is unconsumed; they are released on
@@ -386,7 +395,7 @@ class DataframeModeler:
         """The parameter keys of the categorical channels whose keys the
         strategy cannot enumerate: their distinct values, from ONE scan.
         A path whose dictionary exceeds ``max_dictionary_keys`` switches
-        to hashed buckets or raises, per ``on_dictionary_overflow``."""
+        to hashed buckets."""
         # explode each row into its (path, value) pairs and distinct
         # once: one pass over the input for C dictionary columns, not C.
         # The distinct's map-side partial aggregation still dedupes
@@ -412,39 +421,29 @@ class DataframeModeler:
         keys = pinned = keys.persist()
         out: list[str] = []
         try:
-            if self.max_dictionary_keys is not None:
-                # cardinality probe BEFORE any row collect: O(paths) rows
-                # to the driver, never values. Paths over the cap
-                # auto-bucket (hashing trick) or error; only the
-                # survivors' values are ever materialized.
-                per_path = {
-                    r["path"]: r["c"]
-                    for r in keys.groupBy("path").agg(F.count(F.lit(1)).alias("c")).collect()
-                }
-                over = sorted(p for p, c in per_path.items() if c > self.max_dictionary_keys)
-                if over:
-                    if self.on_dictionary_overflow == "error":
-                        raise DictionaryOverflowError(
-                            f"distinct-value dictionaries for {over} exceed "
-                            f"max_dictionary_keys={self.max_dictionary_keys} "
-                            f"(counts: {[per_path[p] for p in over]}); use "
-                            "HashedBucketStrategy, raise the cap, or set "
-                            "on_dictionary_overflow='auto_bucket'"
-                        )
-                    self.strategy = PathBucketedOverlay(
-                        self.strategy, over, n_buckets=self.overflow_buckets
-                    )
-                    for p in over:
-                        out.extend(self.strategy.enumerate_keys(p))
-                    keys = keys.filter(~F.col("path").isin(*over))
+            # cardinality probe BEFORE any row collect: O(paths) rows to
+            # the driver, never values. Paths over the cap auto-bucket
+            # (hashing trick); only the survivors' values are ever
+            # materialized.
+            per_path = {
+                r["path"]: r["c"]
+                for r in keys.groupBy("path").agg(F.count(F.lit(1)).alias("c")).collect()
+            }
+            over = sorted(p for p, c in per_path.items() if c > self.max_dictionary_keys)
+            if over:
+                self.strategy = PathBucketedOverlay(
+                    self.strategy, over, n_buckets=self.overflow_buckets
+                )
+                for p in over:
+                    out.extend(self.strategy.enumerate_keys(p))
+                keys = keys.filter(~F.col("path").isin(*over))
             out.extend(
                 self.strategy.key_for(path, value)
                 for path, value in sorted((r["path"], r["value"]) for r in keys.collect())
             )
         finally:
-            # unpersist on EVERY exit — a DictionaryOverflowError (or any
-            # probe failure) must not leak a cached RDD into a long-lived
-            # session
+            # unpersist on EVERY exit — a probe failure must not leak a
+            # cached RDD into a long-lived session
             pinned.unpersist()
         return out
 
@@ -455,37 +454,22 @@ class DataframeModeler:
         chans: list[Channel],
         params: dict[str, np.ndarray],
         stats: dict[str, tuple[float, float, float]],
-        size: int,
-        mapping_power: int,
         skip_paths: set[str],
-        strat: "ModelingStrategy",
-    ) -> tuple[np.ndarray, dict[str, np.ndarray]]:
-        """Batch → summed feature tensor [n, size] (F1+F2 reduced by F3
-        sum). Returns per-channel caches for backward."""
-        n = len(pdf)
+        strat: ModelingStrategy,
+    ) -> tuple[np.ndarray, dict]:
+        """Batch → summed feature tensor [n, default_size] (F1+F2 reduced
+        by F3 sum). Returns per-channel caches for backward."""
+        n, size = len(pdf), strat.default_size
         out = np.zeros((n, size))
-        caches: dict[str, np.ndarray] = {}
+        caches: dict = {}
         for ch in chans:
             if ch.path in skip_paths:
                 continue
             col = pdf[ch.col.replace(".", "__")]
             if ch.kind == "categorical":
-                vals = _render_values(col, ch.dtype)
-                rows = np.zeros((n, size))
-                lookup: dict = {}
-                for i, v in enumerate(vals):
-                    if v is None:
-                        continue  # null category -> zero contribution
-                    vec = lookup.get(v)
-                    if vec is None:
-                        key = strat.key_for(ch.path, v)
-                        vec = params.get(key)
-                        if vec is None:  # lookup-or-init, deterministic
-                            vec = strat.initial_representation(key)
-                        lookup[v] = vec
-                    rows[i] = vec
-                out += rows
-                caches[ch.path] = vals
+                codes, values = _encode(col, ch.dtype)
+                out += _value_table(ch.path, values, params, strat, size)[codes]
+                caches[ch.path] = (codes, values)
             elif ch.kind == "vector":
                 w = params.get(f"vector/{ch.path}")
                 if w is None:
@@ -515,7 +499,7 @@ class DataframeModeler:
                 # null numeric -> z=0 (the mean), mirroring the
                 # null-categorical zero-contribution convention
                 z = np.nan_to_num(z, nan=0.0)
-                feats = np.stack([z**i for i in range(mapping_power)], axis=1)  # [1, z, ...]
+                feats = np.stack([z**i for i in range(strat.mapping_power)], axis=1)  # [1, z, ...]
                 out += feats @ params[f"transform/{ch.path}"]
                 caches[ch.path] = feats
         return out, caches
@@ -524,29 +508,25 @@ class DataframeModeler:
     def _route_feature_grads(
         grad_in: np.ndarray,
         chans: list[Channel],
-        caches: dict[str, np.ndarray],
-        skip_paths: set[str],
-        strat: "ModelingStrategy",
+        caches: dict,
+        strat: ModelingStrategy,
     ) -> dict[str, np.ndarray]:
         """Route d(loss)/d(features) into embedding and transform
         gradients (reference `DataframeModeler.accumulate`,
         `DataframeModeler.scala:192-211`)."""
         grads: dict[str, np.ndarray] = {}
         for ch in chans:
-            if ch.path in skip_paths or ch.path not in caches:
-                continue
+            if ch.path not in caches:
+                continue  # skipped (the label) or an empty vector channel
             if ch.kind == "categorical":
-                vals = caches[ch.path]
-                # group rows by categorical value: one grad per key
-                # (hashed-bucket keys accumulate across colliding values;
-                # null categories contributed nothing -> no gradient)
-                groups: dict = {}
-                for i, v in enumerate(vals):
-                    if v is not None:
-                        groups.setdefault(v, []).append(i)
-                for v, idxs in groups.items():
+                codes, values = caches[ch.path]
+                # one gradient per distinct value, its rows summed in row
+                # order; the last row takes code -1 (NULL) and is dropped.
+                # Hashed-bucket keys accumulate across colliding values.
+                acc = np.zeros((len(values) + 1, grad_in.shape[1]))
+                np.add.at(acc, codes, grad_in)
+                for v, g in zip(values, acc):
                     key = strat.key_for(ch.path, v)
-                    g = grad_in[idxs].sum(axis=0)
                     prev = grads.get(key)
                     grads[key] = g if prev is None else prev + g
             elif ch.kind == "vector":
@@ -556,12 +536,13 @@ class DataframeModeler:
                 grads[f"transform/{ch.path}"] = feats.T @ grad_in
         return grads
 
-    def _flat_select(self, df: DataFrame, chans: list[Channel]) -> DataFrame:
-        """Flatten (possibly nested) channel columns to top level so the
-        Arrow batches carry plain columns; pushes column pruning into
-        the scan."""
+    def _flat_select(self, df: DataFrame, chans: list[Channel], passthrough: list[str] = ()) -> DataFrame:
+        """The ``passthrough`` columns, then the (possibly nested) channel
+        columns flattened to top level, so the Arrow batches carry plain
+        columns; pushes column pruning into the scan."""
         return df.select(
-            *[F.col(ch.col).alias(ch.col.replace(".", "__")) for ch in chans]
+            *[F.col(c) for c in passthrough],
+            *[F.col(ch.col).alias(ch.col.replace(".", "__")) for ch in chans],
         )
 
     # -- M1: batch inference ------------------------------------------
@@ -611,8 +592,6 @@ class DataframeModeler:
                 self.context.all_params(),
                 self.context.stats,
                 chans,
-                self.strategy.default_size,
-                self.strategy.mapping_power,
                 skip,
                 network.layers if network else None,
                 self.strategy,
@@ -623,9 +602,9 @@ class DataframeModeler:
         featurize = DataframeModeler._featurize
 
         def infer(batches):
-            params, stats, chans_b, size, power, skip_b, net_layers, strat = bc.value
+            params, stats, chans_b, skip_b, net_layers, strat = bc.value
             for pdf in batches:
-                x, _ = featurize(pdf, chans_b, params, stats, size, power, skip_b, strat)
+                x, _ = featurize(pdf, chans_b, params, stats, skip_b, strat)
                 if net_layers:
                     for layer in net_layers:
                         x, _ = layer.forward(params, x)
@@ -635,10 +614,7 @@ class DataframeModeler:
                 out[name] = x.tolist()
                 yield out
 
-        flat = df.select(
-            *[F.col(c) for c in passthrough],
-            *[F.col(ch.col).alias(ch.col.replace(".", "__")) for ch in chans],
-        )
+        flat = self._flat_select(df, chans, passthrough)
         out_schema = ", ".join(
             [f"`{c}` {df.schema[c].dataType.simpleString()}" for c in passthrough]
             + [f"{name} array<double>"]
@@ -677,8 +653,6 @@ class DataframeModeler:
                 eval_params,
                 self.context.stats,
                 chans,
-                self.strategy.default_size,
-                self.strategy.mapping_power,
                 skip,
                 network,
                 label_chan,
@@ -690,33 +664,19 @@ class DataframeModeler:
         route = DataframeModeler._route_feature_grads
 
         def fwd_bwd(batches):
-            params, stats, chans_b, size, power, skip_b, net, lchan, strat, fwd_only = bc.value
+            params, stats, chans_b, skip_b, net, lchan, strat, fwd_only = bc.value
             acc: dict[str, np.ndarray] = {}
             loss_sum, n_rows = 0.0, 0
             for pdf in batches:
-                if not len(pdf):
+                # rows with a NULL label are left out of the loss
+                codes, values = _encode(pdf[lchan.col.replace(".", "__")], lchan.dtype)
+                keep = codes >= 0
+                if not keep.any():
                     continue
-                labels = _render_values(pdf[lchan.col.replace(".", "__")], lchan.dtype)
-                keep = [i for i, v in enumerate(labels) if v is not None]
-                if not keep:
-                    continue
-                if len(keep) < len(pdf):
-                    pdf = pdf.iloc[keep].reset_index(drop=True)
-                    labels = [labels[i] for i in keep]
-                x, caches = featurize(
-                    pdf, chans_b, params, stats, size, power, skip_b, strat
-                )
-                # one lookup per DISTINCT label, not per row (the .get
-                # default would eagerly build a seeded tensor per row)
-                table: dict = {}
-                for v in labels:
-                    if v not in table:
-                        key = strat.key_for(lchan.path, v)
-                        vec = params.get(key)
-                        table[v] = (
-                            vec if vec is not None else strat.initial_representation(key)
-                        )
-                target = np.stack([table[v] for v in labels])
+                if not keep.all():
+                    pdf, codes = pdf[keep].reset_index(drop=True), codes[keep]
+                x, caches = featurize(pdf, chans_b, params, stats, skip_b, strat)
+                target = _value_table(lchan.path, values, params, strat, strat.size(lchan.path))[codes]
                 w = len(pdf)
                 if fwd_only:
                     logits, _ = net.forward(params, x)
@@ -725,7 +685,7 @@ class DataframeModeler:
                     n_rows += w
                     continue
                 loss, grads, grad_x = net.loss_and_grads(params, x, target)
-                grads.update(route(grad_x, chans_b, caches, skip_b, strat))
+                grads.update(route(grad_x, chans_b, caches, strat))
                 loss_sum += loss * w
                 n_rows += w
                 # loss_and_grads returns batch-MEAN gradients; convert

@@ -36,9 +36,13 @@ _GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interru
 # Numbers a re-run of the same plan may renumber: lambda variables
 # (PySpark numbers their names per process), expression ids (``#123``),
 # exchange plan ids, whole-stage codegen ids, the RDD id and call site of
-# a frame built from Python rows, and AQE query-stage ids (stages are
-# created as earlier ones finish).
-_PLAN_IDS = re.compile(r"lambda \w+#\d+|#\d+|plan_id=\d+|codegen id : \d+|RDD\[\d+\] at [^,\n]*")
+# a frame built from Python rows, AQE query-stage ids (stages are
+# created as earlier ones finish), and the rest of a staging directory's
+# name after its ``msdf_`` prefix (``sources.staging.staging_dir`` adds a
+# random suffix per run).
+_PLAN_IDS = re.compile(
+    r"lambda \w+#\d+|#\d+|plan_id=\d+|codegen id : \d+|RDD\[\d+\] at [^,\n]*|(?<=msdf_)[^/\]\s,]+"
+)
 _STAGE_IDS = re.compile(r"(QueryStage\n(?:Output .*\n)?Arguments: )\d+")
 
 
@@ -82,12 +86,17 @@ def last_plan_description(spark) -> str:
     return _last_execution(spark).physicalPlanDescription()
 
 
-def last_plan_fingerprint(spark) -> str:
-    """A short hash of ``last_plan_description`` with run-local ids
+def plan_fingerprint(description: str) -> str:
+    """A short hash of a physical plan description with run-local ids
     masked. Two runs with the same fingerprint executed the same
     physical plan."""
-    masked = _STAGE_IDS.sub(r"\1#", _PLAN_IDS.sub("#", last_plan_description(spark)))
+    masked = _STAGE_IDS.sub(r"\1#", _PLAN_IDS.sub("#", description))
     return hashlib.sha256(masked.encode()).hexdigest()[:12]
+
+
+def last_plan_fingerprint(spark) -> str:
+    """``plan_fingerprint`` of ``last_plan_description``."""
+    return plan_fingerprint(last_plan_description(spark))
 
 
 def record(spark, action) -> Record:

@@ -6,7 +6,10 @@ from __future__ import annotations
 import itertools
 
 import numpy as np
+import pandas as pd
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from mindseye_dataframes_spark.featurize import (
@@ -16,6 +19,8 @@ from mindseye_dataframes_spark.featurize import (
     ModelingStrategy,
 )
 from mindseye_dataframes_spark.featurize import modeler as modeler_module
+from mindseye_dataframes_spark.featurize.modeler import Channel
+from mindseye_dataframes_spark.featurize.strategy import HashedBucketStrategy
 from mindseye_dataframes_spark.featurize.layers import Dense, Network, ReLU, mlp
 from mindseye_dataframes_spark.functions.hashing import (
     hmac_sha1_seed,
@@ -311,11 +316,6 @@ def test_dictionary_overflow_auto_buckets_high_cardinality(spark):
     then runs end-to-end with the overlay. Reference context:
     `DataframeModeler.scala:163-178` is the unconditional collect being
     guarded."""
-    import numpy as np
-
-    from mindseye_dataframes_spark.featurize.modeler import (
-        DictionaryOverflowError,
-    )
     from mindseye_dataframes_spark.featurize.strategy import (
         PathBucketedOverlay,
     )
@@ -332,7 +332,6 @@ def test_dictionary_overflow_auto_buckets_high_cardinality(spark):
     modeler = DataframeModeler(
         ModelingStrategy(default_size=4),
         max_dictionary_keys=50,
-        on_dictionary_overflow="auto_bucket",
         overflow_buckets=16,
     )
     modeler.init_keys(df)
@@ -362,25 +361,6 @@ def test_dictionary_overflow_auto_buckets_high_cardinality(spark):
             + np.array([1.0, z]) @ w
         )
         assert np.allclose(by_id[i], expect, atol=1e-9), i
-
-
-def test_dictionary_overflow_error_mode_raises(spark):
-    from mindseye_dataframes_spark.featurize.modeler import (
-        DictionaryOverflowError,
-    )
-
-    df = spark.createDataFrame(
-        [(f"user_{i}",) for i in range(200)], "user string"
-    )
-    modeler = DataframeModeler(
-        ModelingStrategy(default_size=4),
-        max_dictionary_keys=50,
-        on_dictionary_overflow="error",
-    )
-    import pytest as _pytest
-
-    with _pytest.raises(DictionaryOverflowError, match="user"):
-        modeler.init_keys(df)
 
 
 def test_bucketed_overlay_respects_base_path_size():
@@ -715,3 +695,134 @@ def test_gradient_merge_sums_partials_in_partition_order():
         assert np.asarray(row.grad).tobytes() == want_grad.tobytes(), order
         (row,) = modeler_module.merge_group((modeler_module.LOSS_KEY,), pdf).itertuples()
         assert (row.loss, row.n) == (want_loss, 3), order
+
+
+def _render(v, dtype: str) -> str | None:
+    """Spark's CAST(x AS STRING) of one pandas cell, NULL and NaN as None."""
+    if v is None or v is pd.NA or (isinstance(v, float) and np.isnan(v)):
+        return None
+    if dtype == "boolean":
+        return "true" if v else "false"
+    return str(int(v)) if dtype in ("int", "bigint") else str(v)
+
+
+def _row_order_reference(pdf, chans, params, strat, grad_in):
+    """The categorical kernels, one row at a time: each row's parameter
+    summed channel by channel, and each value's gradient summed over its
+    rows in row order from +0.0, then added per key in order of first
+    appearance (colliding hashed buckets)."""
+    n, size = len(pdf), strat.default_size
+    out, grads = np.zeros((n, size)), {}
+    for ch in chans:
+        rows, per_value = np.zeros((n, size)), {}
+        for i, raw in enumerate(pdf[ch.col]):
+            v = _render(raw, ch.dtype)
+            if v is None:
+                continue
+            key = strat.key_for(ch.path, v)
+            rows[i] = params[key] if key in params else strat.initial_representation(key)
+            per_value[v] = per_value.get(v, np.zeros(size)) + grad_in[i]
+        out += rows
+        for v, g in per_value.items():
+            key = strat.key_for(ch.path, v)
+            grads[key] = grads[key] + g if key in grads else g
+    return out, grads
+
+
+_CELLS = {
+    "s": (["a", "b", "c", "nan", "", None], "string"),
+    "i": ([-3.0, -0.0, 0.0, 1.0, 2.0, None], "int"),
+    "b": ([True, False, None], "boolean"),
+    "k": ([0, 1, 5, -(2**40)], "bigint"),
+}
+
+
+@given(data=st.data())
+@settings(max_examples=300, deadline=None)
+def test_categorical_kernels_match_row_order_reference(data):
+    """``_featurize``, ``_route_feature_grads`` and the label target give
+    a row-by-row computation's doubles bit for bit: NULL, NaN, booleans,
+    integers that arrived as float64, hashed-bucket collisions,
+    signed-zero and order-sensitive gradients, empty and all-NULL
+    batches, sizes 1 through 10."""
+    size = data.draw(st.integers(1, 10), label="size")
+    strat = data.draw(
+        st.sampled_from(
+            [ModelingStrategy(default_size=size), HashedBucketStrategy(n_buckets=7, default_size=size)]
+        )
+    )
+    n = data.draw(st.integers(0, 20), label="rows")
+    all_null = data.draw(st.booleans(), label="all_null")
+    cols = {}
+    for name, (cells, _) in _CELLS.items():
+        vals = data.draw(st.lists(st.sampled_from(cells), min_size=n, max_size=n), label=name)
+        if all_null and None in cells:
+            vals = [None] * n
+        if name == "i" and (None in vals or data.draw(st.booleans(), label="int_as_float")):
+            cols[name] = pd.Series([np.nan if v is None else v for v in vals], dtype="float64")
+        elif name == "b" and None not in vals:
+            cols[name] = pd.Series(vals, dtype=bool)
+        else:
+            cols[name] = pd.Series(vals, dtype="int64" if name == "k" else object)
+    pdf = pd.DataFrame(cols)
+    chans = [Channel(name, name, "categorical", dtype) for name, (_, dtype) in _CELLS.items()]
+    rng = np.random.default_rng(data.draw(st.integers(0, 2**32 - 1), label="seed"))
+    known = {_render(v, d) for name, (_, d) in _CELLS.items() for v in pdf[name]} - {None}
+    params = {
+        strat.key_for(ch.path, v): rng.standard_normal(size)
+        for ch in chans for v in sorted(known) if rng.random() < 0.5
+    }
+    grid = [0.0, -0.0, 1.0, -1.0, 0.1, 1e16, -1e16, 3.0e-17]
+    grad_in = np.array(data.draw(st.lists(st.sampled_from(grid), min_size=n * size, max_size=n * size)))
+    grad_in = grad_in.reshape(n, size)
+
+    out, caches = DataframeModeler._featurize(pdf, chans, params, {}, set(), strat)
+    grads = DataframeModeler._route_feature_grads(grad_in, chans, caches, strat)
+    want_out, want_grads = _row_order_reference(pdf, chans, params, strat, grad_in)
+    assert out.tobytes() == want_out.tobytes()
+    assert grads.keys() == want_grads.keys()
+    for key, g in want_grads.items():
+        assert grads[key].tobytes() == g.tobytes(), key
+
+    # the label target: the non-NULL rows' parameters, in row order
+    ch = chans[1]
+    codes, values = modeler_module._encode(pdf[ch.col], ch.dtype)
+    target = modeler_module._value_table(ch.path, values, params, strat, size)[codes[codes >= 0]]
+    want, _ = _row_order_reference(pdf, [ch], params, strat, np.zeros((n, size)))
+    rendered = [_render(v, ch.dtype) for v in pdf[ch.col]]
+    assert target.tobytes() == want[[v is not None for v in rendered]].tobytes()
+
+
+@pytest.mark.parametrize("parts", [1, 3])
+def test_categorical_rendering_through_arrow(spark, parts):
+    """The rendering rules, end to end through Arrow: a nullable int
+    column reaches pandas as float64 and keys as ``i=3``, a boolean as
+    ``b=true``, and a NULL contributes zero. Gradient keys are the keys
+    ``init_keys`` found; none reads ``.0``, ``True``, ``nan`` or ``None``."""
+    combos = list(itertools.product([3, None], [True, None], ["x", None]))
+    rows = [(rid, i, b, s, 1 + rid % 2) for rid, (i, b, s) in enumerate(combos * 2)]
+    df = spark.createDataFrame(
+        rows, "rid long, i int, b boolean, s string, label int"
+    ).repartition(parts)
+    modeler = DataframeModeler(CategorizingStrategy("label", categories=2, default_size=4))
+    modeler.init_keys(df.drop("rid"), "label")
+    reps = modeler.context.representations
+    assert {"i=3", "b=true", "s=x"} <= set(reps)
+
+    out = modeler.eval_to_dataframe(df.drop("label"), "f", passthrough=["rid"]).collect()
+    assert len(out) == len(rows)
+    for r in out:
+        _, i, b, s, _ = rows[r["rid"]]
+        want = np.zeros(4)
+        for key in ("i=3" if i else None, "b=true" if b else None, "s=x" if s else None):
+            want = want + (reps[key] if key else np.zeros(4))
+        assert np.array_equal(np.array(r["f"]), want), r["rid"]
+
+    net = mlp("m", 4, [5], 2)
+    modeler.context.layers.update(net.init_params())
+    _, grads = modeler.eval(df.drop("rid"), net, "label")
+    cat_keys = {k for k in grads if "=" in k}
+    assert cat_keys == {"i=3", "b=true", "s=x"}
+    assert cat_keys <= set(reps)
+    for key in grads:
+        assert not any(bad in key for bad in (".0", "True", "nan", "None")), key

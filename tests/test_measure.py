@@ -96,3 +96,18 @@ def test_connect_record_is_wall_time_only(monkeypatch):
     rec = record(_NoJvm(), lambda: ran.append(1))
     assert ran == [1] and rec.wall_s >= 0
     assert rec == Record(wall_s=rec.wall_s)
+
+
+def test_plan_fingerprint_masks_staging_directory_names():
+    """A staging directory's random name is run-local: two plans that
+    differ only there hash alike; a different operator does not."""
+    plan = (
+        "(1) Scan parquet \n"
+        "Output [2]: [id#{n}L, png#{m}]\n"
+        "Location: InMemoryFileIndex [file:/tmp/msdf_png_packed_{suffix}]\n"
+        "ReadSchema: struct<id:bigint,png:binary>\n"
+    )
+    a = plan.format(n=12, m=13, suffix="k2x_9q1a")
+    b = plan.format(n=40, m=41, suffix="z0m4c7_e")
+    assert measure.plan_fingerprint(a) == measure.plan_fingerprint(b)
+    assert measure.plan_fingerprint(a) != measure.plan_fingerprint(a.replace("Scan parquet", "Scan orc"))
